@@ -124,9 +124,8 @@ object Bench {
     extractionRunFiles(spark, Seq(inputPath))
 
   /** Same pass over an explicit file list — the SINGLE definition of what a
-    * measured extraction pass is, shared by Bench, LevelBench and
-    * MultiJvmWorker so the tools cannot drift apart (bench-reconciliation
-    * contract).
+    * measured extraction pass is, shared by Bench and MultiJvmWorker so the
+    * tools cannot drift apart (bench-reconciliation contract).
     */
   def extractionRunFiles(spark: SparkSession, paths: Seq[String]): (Double, Long, Long) = {
     import spark.implicits._
@@ -134,8 +133,8 @@ object Bench {
     val t0 = System.nanoTime()
     // The text probe is octet_length (UTF8String.numBytes, O(1)), NOT
     // length(): char-length calls numChars — a per-byte recount of every
-    // output string that measured 12 ns/char (EncProbe, ~15-20 CPU-s per 1M
-    // docs at local[8]) for an aggregate the bench never even returned. The
+    // output string that measured 12 ns/char (~15-20 CPU-s per 1M docs at
+    // local[8]) for an aggregate the bench never even returned. The
     // column still crosses the encoder (the sum reads it), so the pass still
     // pays the real serialize cost the production write pays; it just stops
     // re-deriving a statistic the real job never computes (bench-definition

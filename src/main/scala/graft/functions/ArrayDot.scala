@@ -25,9 +25,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * null element → null product → null fold result; length mismatch in
   * ArrayDotProduct → zip_with pads with nulls → null. (LshPlaneDot's index
   * array is derived from the vector itself, so no mismatch case exists;
-  * for an EMPTY vector the HOF form yields null-or-0 differences that are
-  * unobservable through the only consumer, `when(d > 0, …)` — both forms
-  * produce bucket bit 0.)
+  * an EMPTY vector meets `sequence(0, -1)` = [0, -1], so zip_with pads a
+  * null and the fold is null.)
   */
 case class ArrayDotProduct(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -118,6 +117,7 @@ case class LshPlaneDot(left: Expression, right: Expression)
 object LshPlaneDot {
   def compute(x: ArrayData, off: Int): java.lang.Double = {
     val n = x.numElements()
+    if (n == 0) return null // the HOF's index array is [0, -1]: padded → null
     var acc = 0.0
     var i = 0
     while (i < n) {

@@ -37,30 +37,6 @@ import scala.collection.mutable.ArrayBuffer
   */
 object ByteTokenizer {
 
-  /** Diagnostic hooks (TokProfile only): JIT-constant flags read once from
-    * system properties, so production runs carry zero cost. `scanOnly`
-    * BREAKS semantics (blocks are scanned but never flushed) — it exists to
-    * attribute scan vs flush cost. Counters attribute flush flavors.
-    */
-  private final val DIAG = java.lang.Boolean.getBoolean("graft.tok.diag")
-  private final val SCAN_ONLY = java.lang.Boolean.getBoolean("graft.tok.scanonly")
-  object Diag {
-    var verbatim = 0L
-    var fused = 0L
-    var raw = 0L
-    var blocks = 0L
-    var segs = 0L
-    var entities = 0L
-    var textBytes = 0L
-    var vhit = 0L
-    var vmiss = 0L
-    var vhitBytes = 0L
-    var smBytes = 0L
-    override def toString: String =
-      s"verbatim=$verbatim fused=$fused raw=$raw blocks=$blocks segs=$segs entities=$entities " +
-        s"textBytes=$textBytes vhit=$vhit vmiss=$vmiss vhitBytes=$vhitBytes smBytes=$smBytes"
-  }
-
   /** Per-thread reusable buffers (r5 profile: per-document allocation and
     * ArrayBuffer bookkeeping dominated once the scan loops went SWAR).
     * Tokenizing now allocates only what escapes — each Block, its text
@@ -436,19 +412,6 @@ object ByteTokenizer {
     private def flush(): Unit = {
       endLinkRunIfOpen()
       if (segN == 0) { clearBlock(); return }
-      if (DIAG) {
-        Diag.blocks += 1
-        Diag.segs += segN
-        var s = 0
-        while (s < segN) {
-          if (segFrom(s) >= 0) Diag.textBytes += segTo(s) - segFrom(s)
-          s += 1
-        }
-        if (!blockAscii) Diag.raw += 1
-        else if (segN == 1 && segFrom(0) >= 0) Diag.verbatim += 1
-        else Diag.fused += 1
-      }
-      if (SCAN_ONLY) { clearBlock(); return }
       if (blockAscii) flushFusedAscii()
       else flushViaRaw()
       clearBlock()
@@ -503,7 +466,6 @@ object ByteTokenizer {
             i += 1
           }
         }
-        if (DIAG) { if (ok) { Diag.vhit += 1; Diag.vhitBytes += e - s } else Diag.vmiss += 1 }
         if (ok) {
           if (blockN >= caps.maxBlocks) { truncated = true; return }
           val len = e - s
@@ -553,7 +515,6 @@ object ByteTokenizer {
           // source byte range, all ASCII
           var i = f
           val e = segTo(s)
-          if (DIAG) Diag.smBytes += e - f
           while (i < e) {
             // SWAR bulk copy-with-holes: a stretch with no controls, no
             // non-space whitespace, no double spaces, and no leading space
@@ -1070,7 +1031,6 @@ object ByteTokenizer {
             i += 1
           }
         } else if (c == '&') {
-          if (DIAG) Diag.entities += 1
           val dec = Entities.tryDecode(view, i, nB)
           if (dec != null) {
             appendDecoded(dec._1, cOff, cOff + dec._2)

@@ -23,15 +23,35 @@ object RelationalQueries {
 
   // r6: one `spark.read.parquet(path)` costs ~80 ms WARM — schema inference
   // re-reads the footer on every call, and every query pays it 1-2×.
-  // Memoize the INFERRED SCHEMA per (session, path) and hand it back via
-  // `.schema(...)`, which skips inference entirely. This caches metadata
-  // only — every action still scans the parquet data; the schema is read
-  // from the same file on first touch per JVM, so results cannot drift.
+  // Memoize the INFERRED SCHEMA per (path, data files) and hand it back via
+  // `.schema(...)`, which skips inference entirely. The key lists every
+  // data file with its length, so a table rewritten in place (new part
+  // files) is re-inferred instead of read through a stale schema. This
+  // caches metadata only — every action still scans the parquet data.
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
   private[queries] def tbl(spark: SparkSession, path: String): DataFrame = {
-    val sch = schemaCache.computeIfAbsent(path, p => spark.read.parquet(p).schema)
+    val key = path + "\n" + dataFiles(spark, path)
+    val sch = schemaCache.computeIfAbsent(key, _ => spark.read.parquet(path).schema)
     spark.read.schema(sch).parquet(path)
+  }
+
+  /** A table's data files as sorted `path:length` entries, skipping the
+    * `_`/`.`-prefixed files Spark ignores; empty if `path` does not exist
+    * (the read then fails as it would uncached).
+    */
+  private def dataFiles(spark: SparkSession, path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) return ""
+    val it = fs.listFiles(p, true)
+    val files = Seq.newBuilder[String]
+    while (it.hasNext) {
+      val f = it.next()
+      val name = f.getPath.getName
+      if (!name.startsWith("_") && !name.startsWith(".")) files += s"${f.getPath}:${f.getLen}"
+    }
+    files.result().sorted.mkString(",")
   }
   private def docs(spark: SparkSession, dir: String): DataFrame =
     tbl(spark, s"$dir/documents.parquet")
@@ -78,8 +98,8 @@ object RelationalQueries {
 
   // r6: ONE select instead of two withColumns — every DataFrame
   // transformation runs the analyzer eagerly over the whole accumulated
-  // plan, and chain-building measured 120-150 ms per window query (PlanCost
-  // probe); identical logical result (CollapseProject produces the same
+  // plan, and chain-building measured 120-150 ms per window query;
+  // identical logical result (CollapseProject produces the same
   // optimized plan either way).
   private def withStats(d: DataFrame): DataFrame =
     d.select(col("*"),

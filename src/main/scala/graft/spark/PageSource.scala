@@ -55,9 +55,11 @@ object PageSource {
     // corpora (the bench input generation) at the old parallelism. Results
     // are partitioning-invariant by construction (per-row determinism —
     // the documented property this source exists to provide).
+    // Sized in Long and narrowed last: (n + 15) / 16 overflows Int from
+    // n ≈ 2^35, which would collapse a huge corpus to the 4-task floor.
     val parts = if (partitions > 0) partitions
-    else math.min(spark.sparkContext.defaultParallelism * 2,
-      math.max(4, ((n + 15) / 16).toInt))
+    else math.min(spark.sparkContext.defaultParallelism * 2L,
+      math.max(4L, (n + 15) / 16)).toInt
     spark.range(0L, n, 1L, parts).mapPartitions(ids => ids.map(id => gen(id)))
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Extraction throughput through a REAL standalone cluster (multi-executor
   * JVMs, cross-process task dispatch and result serialization) — the
-  * cluster-real companion to LevelBench's local[N] passes and
+  * cluster-real companion to perfbench's local[N] passes and
   * MultiJvmBench's executor emulation. All JVMs share this box, so the
   * numbers measure the engine + real Spark distribution machinery, not
   * network hardware.

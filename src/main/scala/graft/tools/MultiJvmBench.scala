@@ -85,10 +85,10 @@ object MultiJvmBench {
       // session). r4-engine floors on 1M docs: 167 s for 1×8, 744 s for
       // 4×8; r5 byte-pipeline floors: ~103 / ~455. Contention on sub-pass
       // timescales defeats plain pairing (first session: A-side CPU
-      // 172–340 under a sustained burst), so the LevelBench lesson applies
-      // at pair granularity: keep the pair loop running and ACCEPT only
-      // pairs whose own CPU says both sides ran clean — the artifact
-      // records every pair either way.
+      // 172–340 under a sustained burst), so the quiet-pass lesson of the
+      // local[N] level runs applies at pair granularity: keep the pair
+      // loop running and ACCEPT only pairs whose own CPU says both sides
+      // ran clean — the artifact records every pair either way.
       val floorCpuA = if (args.length > 5) args(5).toDouble else 167.0
       val floorCpuB = if (args.length > 6) args(6).toDouble else 744.0
       val cleanCpuA = floorCpuA * 1.12

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 
 /** Distributed-pass cost decomposition: runs the SAME corpus through
   * cumulative prefixes of the extraction pass and reports summed task CPU
-  * for each, so the per-stage cost of the REAL Spark job (not the
-  * single-threaded MicroBench) is attributable:
+  * for each, so the per-stage cost of the REAL Spark job (not a
+  * single-threaded micro-benchmark) is attributable:
   *
   *   scan     parquet scan + snappy decompress + columnar assembly
   *            (sum(length(html)) — vectorized reader, no JVM row objects)
@@ -21,7 +21,6 @@ import org.apache.spark.sql.functions._
   *            assemble/stats), counters-only output — no Dataset encoding
   *   full     the measured bench pass: `full` − `pipe` is the ExtractedDoc
   *            encoder (SerializeFromObject) + aggregate + result plumbing
-  *            (see EncProbe for the single-thread decomposition of that term)
   *
   * The delta between consecutive rows is the marginal CPU of that stage at
   * the target parallelism — the number that decides where the next

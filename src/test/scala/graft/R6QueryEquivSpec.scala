@@ -166,16 +166,34 @@ class R6QueryEquivSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(java.lang.Double.doubleToRawLongBits(r.getDouble(2)) ==
         java.lang.Double.doubleToRawLongBits(r.getDouble(3)))
     }
-    // null-element and length-mismatch semantics mirror zip_with padding
+    // null-element, length-mismatch and empty-vector semantics mirror
+    // zip_with padding (an empty vector's index array is sequence(0, -1))
     val corner = Seq(
       (Array[java.lang.Double](1.0, null), Array[java.lang.Double](2.0, 3.0)),
-      (Array[java.lang.Double](1.0), Array[java.lang.Double](2.0, 3.0))
+      (Array[java.lang.Double](1.0), Array[java.lang.Double](2.0, 3.0)),
+      (Array[java.lang.Double](), Array[java.lang.Double](2.0, 3.0))
     ).toDF("a", "b")
       .select(
         aggregate(zip_with(col("a"), col("b"), _ * _), lit(0.0), _ + _).as("hd"),
-        call_function("graft_dot", col("a"), col("b")).as("nd"))
+        call_function("graft_dot", col("a"), col("b")).as("nd"),
+        hofPlane.as("hp"), call_function("graft_lsh_dot", col("a"), lit(17)).as("np"))
       .collect()
     corner.foreach(r => assert(r.isNullAt(0) && r.isNullAt(1)))
+    corner.foreach { r =>
+      assert(r.isNullAt(2) == r.isNullAt(3))
+      if (!r.isNullAt(2)) assert(r.getDouble(2) == r.getDouble(3))
+    }
+  }
+
+  test("tbl re-infers the schema when a table is rewritten in place") {
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("schemacache").toString + "/t.parquet"
+    Seq((1L, "a")).toDF("id", "a").write.parquet(path)
+    assert(RelationalQueries.tbl(spark, path).columns.toSeq == Seq("id", "a"))
+    Seq((2L, 3.0, "x")).toDF("id", "b", "c").write.mode("overwrite").parquet(path)
+    val after = RelationalQueries.tbl(spark, path)
+    assert(after.columns.toSeq == Seq("id", "b", "c"))
+    assert(after.collect().map(_.toString).toSeq == Seq("[2,3.0,x]"))
   }
 
   test("fused/exchanged single-partition sort == orderBy, multi-partition input") {

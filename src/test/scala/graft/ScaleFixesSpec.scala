@@ -43,6 +43,13 @@ class ScaleFixesSpec extends AnyFunSuite {
     assert(canon.count() == 3) // 1 canonical boilerplate + 2 distinct texts
   }
 
+  test("PageSource sizes partitions in Long: a 2^36-doc corpus keeps 2x parallelism") {
+    // (n + 15) / 16 exceeds Int.MaxValue here; narrowing it first wrapped
+    // to 0 and collapsed the corpus to the 4-task floor. Planning only.
+    val pages = graft.spark.PageSource.pages(spark, 1L << 36)
+    assert(pages.rdd.getNumPartitions == spark.sparkContext.defaultParallelism * 2)
+  }
+
   test("lineage dedupe: retried partition supersedes, never adds") {
     val t = new java.sql.Timestamp(0L)
     val rows = Seq(
