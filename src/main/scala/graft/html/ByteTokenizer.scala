@@ -4,36 +4,45 @@ import graft.core.Block
 import graft.text.Canon
 import scala.collection.mutable.ArrayBuffer
 
-/** Byte-level HTML → block tokenizer — the UTF-8 fast path of the pipeline
-  * (VERDICT r4 item 1: tokenize is 75% of extraction CPU and the char-path
-  * costs are memory traffic — decode to UTF-16 doubles every load, and each
-  * content block is copied through two StringBuilders before Canon returns).
+/** Byte-level HTML → block tokenizer — the pipeline's tokenizer for every
+  * decodable page under the char cap (VERDICT r4 item 1: tokenize is 75% of
+  * extraction CPU and the char-path costs are memory traffic — decode to
+  * UTF-16 doubles every load, and each content block is copied through two
+  * StringBuilders before Canon returns). UTF-8 pages are tokenized in
+  * place; any other page is transcoded to UTF-8 once first
+  * (pipeline/Extract.scala).
   *
   * This is the integral-image discipline of the reference applied to the
   * tokenizer itself (binarizeSauvola.cpp:72-90: restate the same computation
   * so each unit of input is touched a constant small number of times): the
   * raw page BYTES are scanned once; each block is recorded as a list of
   * source byte-range segments; and an all-ASCII block — the dominant case —
-  * is canonicalized straight from the source bytes into a reusable char
+  * is canonicalized straight from the source bytes into a reusable byte
   * buffer in ONE fused pass (whitespace collapse + control strip + link-run
   * char/token counts), producing exactly one String per block.
   *
   * SEMANTICS ARE IDENTICAL to [[HtmlTokenizer]] over the decoded text — the
   * contract is `ByteTokenizer(bytes) == HtmlTokenizer(Decode(bytes).text)`
   * field-for-field, property-tested across every fixture corpus and a
-  * random-document differential suite (ByteTokenizerSpec). Blocks containing
-  * non-ASCII bytes or non-ASCII entity expansions fall back to materializing
-  * the same intermediate string the char path builds and then run the char
-  * path's own flush logic (NFC handling included), so divergence is
-  * structurally confined to pure-ASCII content where byte == char.
+  * random-document differential suite (ByteTokenizerSpec). Each block is
+  * flushed by one of three routes, chosen by its VISIBLE chars (invisible
+  * ones — whitespace, zero-width, controls — are collapsed or stripped on
+  * every route):
+  *   - all ASCII: the fused byte flush above;
+  *   - all below U+0300 (Latin script): a fused flush into a char buffer,
+  *     the same state machine per decoded char — such text is already NFC;
+  *   - anything else (combining marks, CJK, U+FFFD, astral): materialize
+  *     the same intermediate string the char path builds and run the char
+  *     path's own flush logic, NFC pass included.
   *
   * Offsets: `Block.startOff`/`endOff`/spans are CHAR offsets into the
   * decoded text (the public contract, core/schema.scala:27). The scanner
   * maintains the running UTF-16 offset alongside the byte offset — each
   * non-continuation byte advances it by 1, each 4-byte lead by 2 (surrogate
   * pair). Eligibility (valid UTF-8, under the char cap) is established by
-  * [[prescan]] before this tokenizer runs; invalid/oversize input takes the
-  * decoded-String path unchanged.
+  * [[prescan]] before this tokenizer runs: a page that is not valid UTF-8
+  * is transcoded to it first, and only an over-cap page takes the
+  * decoded-String path.
   */
 object ByteTokenizer {
 
@@ -67,9 +76,10 @@ object ByteTokenizer {
     var pathNodeBudget = 1 << 16
     var segFrom = new Array[Int](64)
     var segTo = new Array[Int](64)
-    var segMeta = new Array[Int](64)
+    var segLink = new Array[Int](64)
     var segStr = new Array[String](16)
     var byteBuf = new Array[Byte](4096)
+    var charBuf = new Array[Char](4096)
     var blockBuf = new Array[Block](128)
     // isolated-\t..\r hole positions within one bulk copy run (fused flush);
     // a run with more holes than this simply splits into several bulk runs
@@ -77,6 +87,11 @@ object ByteTokenizer {
   }
   private val scratchTL: ThreadLocal[Scratch] =
     ThreadLocal.withInitial(() => new Scratch)
+
+  // flush route of a block (the highest kind among its visible chars wins)
+  private final val KAscii = 0 // fused byte flush
+  private final val KLatin = 1 // fused char flush: all below U+0300
+  private final val KRaw = 2 // raw string + Canon (NFC)
 
   /** One fused validation pass: strict UTF-8 validity (same automaton as
     * Decode.isValidUtf8), decoded UTF-16 length, and the garbage-char count
@@ -101,9 +116,12 @@ object ByteTokenizer {
   @inline private def eqMask(w: Long, c: Int): Long =
     ~(((w ^ (ONES * c)) | HIGH) - ONES) & HIGH
 
-  def prescan(bytes: Array[Byte], off: Int): Prescan = {
+  def prescan(bytes: Array[Byte], off: Int): Prescan = prescan(bytes, off, bytes.length)
+
+  /** [[prescan]] over `bytes[off, end)` (a transcode buffer's filled part). */
+  private[graft] def prescan(bytes: Array[Byte], off: Int, end: Int): Prescan = {
     var i = off
-    val n = bytes.length
+    val n = end
     var len = 0
     var bad = 0
     val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
@@ -205,10 +223,15 @@ object ByteTokenizer {
   }
 
   def apply(bytes: Array[Byte], off: Int, caps: HtmlTokenizer.Caps = HtmlTokenizer.DefaultCaps): HtmlTokenizer.Result =
-    new ByteRun(bytes, off, caps).run()
+    new ByteRun(bytes, off, bytes.length, caps).run()
 
-  private final class ByteRun(bytes: Array[Byte], off: Int, caps: HtmlTokenizer.Caps) {
-    private val nB = bytes.length
+  /** [[apply]] over `bytes[off, end)` (a transcode buffer's filled part). */
+  private[graft] def tokenize(bytes: Array[Byte], off: Int, end: Int,
+      caps: HtmlTokenizer.Caps): HtmlTokenizer.Result =
+    new ByteRun(bytes, off, end, caps).run()
+
+  private final class ByteRun(bytes: Array[Byte], off: Int, end: Int, caps: HtmlTokenizer.Caps) {
+    private val nB = end
     private val view = new AsciiView(bytes, nB)
     private val scratch = scratchTL.get()
     private var blockBuf = scratch.blockBuf
@@ -295,16 +318,17 @@ object ByteTokenizer {
 
     // ---- per-block segment list (replaces the char Run's StringBuilder).
     // A segment is either a source byte range [segFrom, segTo) or a decoded
-    // entity (segFrom = -(index into segStr) - 1). segMeta packs
-    // (linkId << 1 | asciiBit). linkId mirrors the char Run's link-run
+    // entity (segFrom = -(index into segStr) - 1). segLink holds its
+    // linkId, which mirrors the char Run's link-run
     // open/close protocol: one id per beginLinkRun..endLinkRun window.
     private var segFrom = scratch.segFrom
     private var segTo = scratch.segTo
-    private var segMeta = scratch.segMeta
+    private var segLink = scratch.segLink
     private var segN = 0
     private var segStrA = scratch.segStr
     private var segStrN = 0
-    private var blockAscii = true
+    // flush route of the block: the highest kind of any visible char in it
+    private var blockKind = KAscii
     private var approxChars = 0 // upper bound on canonical length (buffer sizing)
 
     private var currentLinkId = 0
@@ -322,6 +346,8 @@ object ByteTokenizer {
     // final String is one Latin1 memcpy (no compact-string compression
     // pass over a char[]).
     private var byteBuf = scratch.byteBuf
+    // the same for the fused Latin flush, whose chars do not fit a byte
+    private var charBuf = scratch.charBuf
 
     @inline private def inLink: Boolean = anchorDepth > 0
 
@@ -329,20 +355,20 @@ object ByteTokenizer {
       if (inLink && currentLinkId == 0) { nextLinkId += 1; currentLinkId = nextLinkId }
     @inline private def endLinkRunIfOpen(): Unit = currentLinkId = 0
 
-    private def pushSeg(from: Int, to: Int, ascii: Boolean): Unit = {
+    private def pushSeg(from: Int, to: Int, kind: Int): Unit = {
       if (segN == segFrom.length) {
         segFrom = java.util.Arrays.copyOf(segFrom, segN * 2)
         segTo = java.util.Arrays.copyOf(segTo, segN * 2)
-        segMeta = java.util.Arrays.copyOf(segMeta, segN * 2)
+        segLink = java.util.Arrays.copyOf(segLink, segN * 2)
         scratch.segFrom = segFrom
         scratch.segTo = segTo
-        scratch.segMeta = segMeta
+        scratch.segLink = segLink
       }
       segFrom(segN) = from
       segTo(segN) = to
-      segMeta(segN) = (currentLinkId << 1) | (if (ascii) 1 else 0)
+      segLink(segN) = currentLinkId
       segN += 1
-      if (!ascii) blockAscii = false
+      if (kind > blockKind) blockKind = kind
     }
 
     /** Mirror of sawVisible: capture path/depth at first VISIBLE char. */
@@ -359,10 +385,10 @@ object ByteTokenizer {
     /** Append a source byte run [from, to) (visibility extent pre-scanned,
       * char coords). Mirrors appendRunScanned.
       */
-    private def appendRun(from: Int, to: Int, firstC: Int, lastCEnd: Int, ascii: Boolean): Unit = {
+    private def appendRun(from: Int, to: Int, firstC: Int, lastCEnd: Int, kind: Int): Unit = {
       if (suppressDepth > 0 || to <= from) return
       beginLinkRunIfNeeded()
-      pushSeg(from, to, ascii)
+      pushSeg(from, to, kind)
       approxChars += to - from
       if (firstC >= 0) sawVisible(firstC, lastCEnd)
     }
@@ -373,15 +399,16 @@ object ByteTokenizer {
     private def appendDecoded(s: String, srcStartC: Int, srcEndC: Int): Unit = {
       if (suppressDepth > 0) return
       beginLinkRunIfNeeded()
-      var ascii = true
+      var kind = KAscii
       var any = false
       var i = 0
       while (i < s.length) {
         val c = s.charAt(i)
         val invisible = Canon.isWs(c) || Canon.isStripped(c) || Canon.isControl(c)
-        // a non-ASCII expansion only forces the raw/NFC flush when VISIBLE
-        // (nbsp & friends collapse to ASCII before NFC could matter)
-        if (c >= 0x80 && !invisible) ascii = false
+        // only a VISIBLE non-ASCII char leaves the ASCII flush (nbsp &
+        // friends collapse to ASCII before NFC could matter), and only one
+        // at or past U+0300 needs the raw/NFC flush
+        if (c >= 0x80 && !invisible && kind != KRaw) kind = if (c < 0x300) KLatin else KRaw
         if (!any && !invisible) any = true
         i += 1
       }
@@ -391,7 +418,7 @@ object ByteTokenizer {
       }
       segStrA(segStrN) = s
       segStrN += 1
-      pushSeg(-segStrN, 0, ascii) // -(idx+1)
+      pushSeg(-segStrN, 0, kind) // -(idx+1)
       approxChars += s.length
       if (any) sawVisible(srcStartC, srcEndC)
     }
@@ -399,7 +426,7 @@ object ByteTokenizer {
     private def clearBlock(): Unit = {
       segN = 0
       segStrN = 0
-      blockAscii = true
+      blockKind = KAscii
       approxChars = 0
       currentLinkId = 0
       firstOff = -1
@@ -412,7 +439,8 @@ object ByteTokenizer {
     private def flush(): Unit = {
       endLinkRunIfOpen()
       if (segN == 0) { clearBlock(); return }
-      if (blockAscii) flushFusedAscii()
+      if (blockKind == KAscii) flushFusedAscii()
+      else if (blockKind == KLatin) flushFusedLatin()
       else flushViaRaw()
       clearBlock()
     }
@@ -471,7 +499,7 @@ object ByteTokenizer {
           val len = e - s
           val text = new String(bytes, s, len, java.nio.charset.StandardCharsets.ISO_8859_1)
           val nTok = spaces + 1
-          val linked = (segMeta(0) >>> 1) != 0
+          val linked = segLink(0) != 0
           addBlock(Block(
             tagPath = blockPath,
             text = text,
@@ -491,25 +519,10 @@ object ByteTokenizer {
         scratch.byteBuf = byteBuf
       }
       val buf = byteBuf
-      fLen = 0
-      fSpaces = 0
-      fPending = false
-      fLinkChars = 0
-      fLinkTokens = 0
-      fCurLink = 0
-      fLchars = 0
-      fLspaces = 0
-      fLpending = false
+      resetFused()
       var s = 0
       while (s < segN) {
-        val meta = segMeta(s)
-        val linkId = meta >>> 1
-        if (linkId != fCurLink) {
-          closeLinkRun()
-          if (linkId != 0) { fCurLink = linkId; fLchars = 0; fLspaces = 0; fLpending = false }
-        }
-        val inL = linkId != 0
-        fInL = inL
+        val inL = enterSegLink(s)
         val f = segFrom(s)
         if (f >= 0) {
           // source byte range, all ASCII
@@ -595,8 +608,7 @@ object ByteTokenizer {
             val cls = CLS(b)
             if (cls == 0) { // whitespace
               retractTrailingSpace()
-              fPending = true
-              if (inL) fLpending = true
+              fusedWs()
               i += 1
               // tight ws-run skip: every further ASCII ws byte of the run
               // leaves the state machine exactly where it is (pending set,
@@ -615,18 +627,11 @@ object ByteTokenizer {
                   (bytes(i + 2) & 0x3f)).toChar
               if (Canon.isWs(ch)) {
                 retractTrailingSpace()
-                fPending = true
-                if (inL) fLpending = true
+                fusedWs()
               } // isStripped / isControl: removed
               i += cls - 3
             } else { // visible (includes '<' '&' appended as literals)
-              if (fPending && fLen > 0) { buf(fLen) = ' '; fLen += 1; fSpaces += 1 }
-              fPending = false
-              if (inL) {
-                if (fLpending && fLchars > 0) { fLspaces += 1; fLchars += 1 }
-                fLpending = false
-                fLchars += 1
-              }
+              if (fusedVisible()) { buf(fLen) = ' '; fLen += 1 }
               buf(fLen) = b.toByte
               fLen += 1
               i += 1
@@ -638,23 +643,15 @@ object ByteTokenizer {
           // state machine's exact deferred-space protocol
           retractTrailingSpace()
         } else {
-          // decoded entity (ASCII here by blockAscii)
+          // decoded entity (ASCII here by blockKind)
           val str = segStrA(-f - 1)
           var i = 0
           while (i < str.length) {
             val c = str.charAt(i)
-            if (Canon.isWs(c)) {
-              fPending = true
-              if (inL) fLpending = true
-            } else if (Canon.isControl(c) || Canon.isStripped(c)) ()
+            if (Canon.isWs(c)) fusedWs()
+            else if (Canon.isControl(c) || Canon.isStripped(c)) ()
             else {
-              if (fPending && fLen > 0) { buf(fLen) = ' '; fLen += 1; fSpaces += 1 }
-              fPending = false
-              if (inL) {
-                if (fLpending && fLchars > 0) { fLspaces += 1; fLchars += 1 }
-                fLpending = false
-                fLchars += 1
-              }
+              if (fusedVisible()) { buf(fLen) = ' '; fLen += 1 }
               buf(fLen) = c.toByte
               fLen += 1
             }
@@ -664,22 +661,135 @@ object ByteTokenizer {
         s += 1
       }
       closeLinkRun()
-      if (fLen == 0) return
-      if (blockN >= caps.maxBlocks) { truncated = true; return }
-      val text = new String(buf, 0, fLen, java.nio.charset.StandardCharsets.ISO_8859_1)
-      val nTok = fSpaces + 1
-      addBlock(Block(
-        tagPath = blockPath,
-        text = text,
-        startOff = if (firstOff >= 0) firstOff else 0,
-        endOff = if (lastOff >= 0) lastOff else 0,
-        nChars = fLen,
-        nTokens = nTok,
-        nLinkChars = math.min(fLinkChars, fLen),
-        nLinkTokens = math.min(fLinkTokens, nTok),
-        depth = blockDepth,
-        idx = blockN))
+      if (fLen > 0)
+        addFusedBlock(new String(buf, 0, fLen, java.nio.charset.StandardCharsets.ISO_8859_1))
     }
+
+    /** The fused flush for a block whose visible chars are all below U+0300
+      * (Latin-script text: accented letters, œ, ß, IPA, spacing modifiers).
+      * No NFC pass is needed: every pair of code points below U+0300 is
+      * already NFC (CanonSpec checks all of them), U+0300 — the first
+      * combining mark — being the first code point that can compose with
+      * or reorder after such a char; and the block's invisible chars are
+      * stripped or collapse to a space either way. So Canon reduces to
+      * [[flushFusedAscii]]'s strip/collapse/trim state machine, run here
+      * per decoded char into a char buffer.
+      */
+    private def flushFusedLatin(): Unit = {
+      if (approxChars > charBuf.length) {
+        charBuf = new Array[Char](math.max(approxChars, charBuf.length * 2))
+        scratch.charBuf = charBuf
+      }
+      resetFused()
+      var s = 0
+      while (s < segN) {
+        enterSegLink(s)
+        val f = segFrom(s)
+        if (f >= 0) {
+          val buf = charBuf
+          var i = f
+          val e = segTo(s)
+          while (i < e) {
+            val c0 = visibleAt(i)
+            if (c0 >= 0) {
+              // a run of visible chars with single spaces between them: the
+              // separator logic runs for its first char, the rest is a
+              // straight copy (a separator inside the run always precedes a
+              // visible char, so the state machine would emit it as is)
+              if (fusedVisible()) { buf(fLen) = ' '; fLen += 1 }
+              var o = fLen
+              buf(o) = c0.toChar
+              o += 1
+              i += (if (c0 < 0x80) 1 else 2)
+              val o1 = o
+              var sp = 0
+              var go = true
+              while (go && i < e) {
+                val c = visibleAt(i)
+                if (c >= 0) {
+                  buf(o) = c.toChar
+                  o += 1
+                  i += (if (c < 0x80) 1 else 2)
+                } else if (bytes(i) == ' ' && i + 1 < e && visibleAt(i + 1) >= 0) {
+                  val c2 = visibleAt(i + 1)
+                  buf(o) = ' '
+                  buf(o + 1) = c2.toChar
+                  o += 2
+                  sp += 1
+                  i += (if (c2 < 0x80) 2 else 3)
+                } else go = false
+              }
+              fSpaces += sp
+              if (fInL) { fLchars += o - o1; fLspaces += sp }
+              fLen = o
+            } else {
+              // whitespace, controls, zero-width and the like, one at a time;
+              // no 4-byte sequence reaches here: astral chars are visible
+              // and past U+0300
+              val b = bytes(i) & 0xff
+              if (b < 0x80) { latinChar(b.toChar); i += 1 }
+              else if (b < 0xe0) {
+                latinChar((((b & 0x1f) << 6) | (bytes(i + 1) & 0x3f)).toChar)
+                i += 2
+              } else {
+                latinChar((((b & 0x0f) << 12) | ((bytes(i + 1) & 0x3f) << 6) |
+                  (bytes(i + 2) & 0x3f)).toChar)
+                i += 3
+              }
+            }
+          }
+        } else {
+          val str = segStrA(-f - 1)
+          var i = 0
+          while (i < str.length) { latinChar(str.charAt(i)); i += 1 }
+        }
+        s += 1
+      }
+      closeLinkRun()
+      if (fLen > 0) addFusedBlock(new String(charBuf, 0, fLen))
+    }
+
+    /** The char at byte `i` when it is a visible ASCII or a visible 2-byte
+      * Latin char (U+00A1..U+02FF minus the soft hyphen: the only
+      * invisible chars below U+0300 are ASCII whitespace/controls, C1
+      * controls, NEL, nbsp and the soft hyphen), else -1.
+      */
+    @inline private def visibleAt(i: Int): Int = {
+      val b = bytes(i) & 0xff
+      if (b < 0x80) { if (b > 0x20 && b < 0x7f) b else -1 }
+      else if (b < 0xcc) {
+        val c = ((b & 0x1f) << 6) | (bytes(i + 1) & 0x3f)
+        if (c > 0xa0 && c != 0xad) c else -1
+      } else -1
+    }
+
+    /** One decoded char through the fused state machine (Latin flush). */
+    @inline private def latinChar(c: Char): Unit =
+      if ((c > ' ' && c < 0x7f) ||
+        !(Canon.isWs(c) || Canon.isControl(c) || Canon.isStripped(c))) {
+        if (fusedVisible()) { charBuf(fLen) = ' '; fLen += 1 }
+        charBuf(fLen) = c
+        fLen += 1
+      } else if (Canon.isWs(c)) fusedWs()
+      // stripped / control: removed
+
+    /** The canonical block the fused state machine accumulated. */
+    private def addFusedBlock(text: String): Unit =
+      if (blockN >= caps.maxBlocks) truncated = true
+      else {
+        val nTok = fSpaces + 1
+        addBlock(Block(
+          tagPath = blockPath,
+          text = text,
+          startOff = if (firstOff >= 0) firstOff else 0,
+          endOff = if (lastOff >= 0) lastOff else 0,
+          nChars = fLen,
+          nTokens = nTok,
+          nLinkChars = math.min(fLinkChars, fLen),
+          nLinkTokens = math.min(fLinkTokens, nTok),
+          depth = blockDepth,
+          idx = blockN))
+      }
 
     // ---- fused-flush state, hoisted to fields so the flush helpers are
     // plain methods (nested defs capturing local vars box them into heap
@@ -695,6 +805,52 @@ object ByteTokenizer {
     private var fLspaces = 0
     private var fLpending = false
     private var fInL = false
+
+    private def resetFused(): Unit = {
+      fLen = 0
+      fSpaces = 0
+      fPending = false
+      fLinkChars = 0
+      fLinkTokens = 0
+      fCurLink = 0
+      fLchars = 0
+      fLspaces = 0
+      fLpending = false
+    }
+
+    /** Enter segment `s`'s link run, closing the previous one; returns (and
+      * sets fInL) whether the segment is inside a link.
+      */
+    private def enterSegLink(s: Int): Boolean = {
+      val linkId = segLink(s)
+      if (linkId != fCurLink) {
+        closeLinkRun()
+        if (linkId != 0) { fCurLink = linkId; fLchars = 0; fLspaces = 0; fLpending = false }
+      }
+      fInL = linkId != 0
+      fInL
+    }
+
+    /** A whitespace char: the separator is deferred until a visible char. */
+    @inline private def fusedWs(): Unit = {
+      fPending = true
+      if (fInL) fLpending = true
+    }
+
+    /** Count one visible char; true when a deferred separator space must be
+      * written before it (the caller writes both chars).
+      */
+    @inline private def fusedVisible(): Boolean = {
+      val sep = fPending && fLen > 0
+      if (sep) fSpaces += 1
+      fPending = false
+      if (fInL) {
+        if (fLpending && fLchars > 0) { fLspaces += 1; fLchars += 1 }
+        fLpending = false
+        fLchars += 1
+      }
+      sep
+    }
 
     private def closeLinkRun(): Unit = if (fCurLink != 0) {
       fLinkChars += fLchars
@@ -730,7 +886,7 @@ object ByteTokenizer {
       var runStart = -1
       var s = 0
       while (s < segN) {
-        val linkId = segMeta(s) >>> 1
+        val linkId = segLink(s)
         if (linkId != curLink) {
           if (curLink != 0)
             linkRuns += ((runStart.toLong << 32) | raw.length.toLong)
@@ -1026,7 +1182,7 @@ object ByteTokenizer {
             }
           } else {
             // literal '<' (visible ASCII)
-            appendRun(i, i + 1, cOff, cOff + 1, ascii = true)
+            appendRun(i, i + 1, cOff, cOff + 1, KAscii)
             cOff += 1
             i += 1
           }
@@ -1037,7 +1193,7 @@ object ByteTokenizer {
             cOff += dec._2 // entity source is pure ASCII
             i += dec._2
           } else {
-            appendRun(i, i + 1, cOff, cOff + 1, ascii = true)
+            appendRun(i, i + 1, cOff, cOff + 1, KAscii)
             cOff += 1
             i += 1
           }
@@ -1047,7 +1203,7 @@ object ByteTokenizer {
           var j = i
           var firstC = -1
           var lastCEnd = -1
-          var ascii = true
+          var kind = KAscii
           if (suppressDepth > 0) {
             // suppressed text never emits (appendRun/appendDecoded both
             // no-op), and an entity's SOURCE bytes are pure ASCII — one
@@ -1131,11 +1287,16 @@ object ByteTokenizer {
                     !(Canon.isWs(ch) || Canon.isStripped(ch) || Canon.isControl(ch))
                   }
                 if (visible) {
-                  // only a VISIBLE non-ASCII char forces the raw/NFC flush;
-                  // invisible ones (nbsp, zwsp, C1, line-sep — all common in
-                  // real pages) are collapsed/stripped before NFC could
-                  // matter, so the fused ASCII flush handles them inline
-                  ascii = false
+                  // only a VISIBLE non-ASCII char leaves the fused ASCII
+                  // flush; invisible ones (nbsp, zwsp, C1, line-sep — all
+                  // common in real pages) are collapsed/stripped before NFC
+                  // could matter, so that flush handles them inline. A
+                  // visible 2-byte char below U+0300 (lead < 0xCC) keeps
+                  // the block on the fused Latin flush; anything else —
+                  // combining marks, CJK, U+FFFD, astral — takes the raw
+                  // flush with its NFC pass
+                  if (cls != 5 || b >= 0xcc) kind = KRaw
+                  else if (kind == KAscii) kind = KLatin
                   if (firstC < 0) firstC = cOff
                   lastCEnd = cOff + units
                 }
@@ -1145,7 +1306,7 @@ object ByteTokenizer {
               }
             }
           }
-          if (suppressDepth == 0) appendRun(i, j, firstC, lastCEnd, ascii)
+          if (suppressDepth == 0) appendRun(i, j, firstC, lastCEnd, kind)
           i = j
         }
         if (!inLink) endLinkRunIfOpen()
@@ -1155,6 +1316,7 @@ object ByteTokenizer {
       // shrink an over-grown canon buffer before parking the scratch (a
       // single huge block must not pin memory for the thread's lifetime)
       if (scratch.byteBuf.length > (1 << 20)) scratch.byteBuf = new Array[Byte](1 << 16)
+      if (scratch.charBuf.length > (1 << 20)) scratch.charBuf = new Array[Char](1 << 16)
       HtmlTokenizer.Result(java.util.Arrays.copyOf(blockBuf, blockN), truncated)
     }
 

@@ -3,7 +3,9 @@ package graft.html
 import java.nio.charset.{Charset, CodingErrorAction, StandardCharsets}
 import java.nio.ByteBuffer
 
-/** Charset sniffing + decode of raw page bytes to a UTF-16 String.
+/** Charset sniffing + decode of raw page bytes to a UTF-16 String, and the
+  * windows-1252 → UTF-8 transcode that puts those pages on the byte
+  * tokenizer straight from their bytes.
   *
   * Transplant of the reference's lossless representation converters
   * (formatConvert.cpp:38-109 opencv→leptonica and :111-219 back): a
@@ -24,7 +26,7 @@ object Decode {
 
   final case class Decoded(text: String, charset: String)
 
-  private val Win1252 = Charset.forName("windows-1252")
+  private[graft] val Win1252 = Charset.forName("windows-1252")
 
   /** Charset label normalization (subset of the WHATWG encoding registry that
     * our fixtures + common crawl pages realistically use). ISO-8859-1 is
@@ -54,11 +56,9 @@ object Decode {
     * wins, scan window = first 1024 bytes.
     */
   private[html] def sniffMeta(bytes: Array[Byte]): Option[String] = {
-    val n = math.min(bytes.length, 1024)
-    val sb = new java.lang.StringBuilder(n)
-    var k = 0
-    while (k < n) { sb.append((bytes(k) & 0xff).toChar); k += 1 }
-    val prefix = sb.toString.toLowerCase(java.util.Locale.ROOT)
+    // one char per byte (an ASCII-superset view), copied in one intrinsic
+    val prefix = new String(bytes, 0, math.min(bytes.length, 1024),
+      StandardCharsets.ISO_8859_1).toLowerCase(java.util.Locale.ROOT)
     val len = prefix.length
 
     var i = 0
@@ -179,6 +179,55 @@ object Decode {
     // than CharsetDecoder + CharBuffer.toString, with one copy fewer
     new String(bytes, offset, bytes.length - offset, cs)
 
+  /** The fixed detection order's decision for one document, made once (the
+    * meta sniff copies and lowercases up to 1024 chars, so it must not run
+    * twice per doc): the charset to decode with, the content offset (BOM
+    * skip) and the label [[apply]] reports. [[Undeclared]] is conditional —
+    * it holds only when the bytes validate as UTF-8, otherwise the document
+    * is windows-1252 ([[Fallback]]). Every other plan is final: malformed
+    * input under it decodes to U+FFFD (REPLACE).
+    */
+  private[graft] final class Plan(val cs: Charset, val offset: Int, val label: String) {
+    def isUtf8: Boolean = cs eq StandardCharsets.UTF_8
+  }
+
+  private[graft] val Undeclared = new Plan(StandardCharsets.UTF_8, 0, "utf-8")
+  private[graft] val Fallback = new Plan(Win1252, 0, "windows-1252-fallback")
+  private val Utf8Bom = new Plan(StandardCharsets.UTF_8, 3, "utf-8-bom")
+  private val Utf16LeBom = new Plan(StandardCharsets.UTF_16LE, 2, "utf-16le-bom")
+  private val Utf16BeBom = new Plan(StandardCharsets.UTF_16BE, 2, "utf-16be-bom")
+  private val MetaUtf8 = new Plan(StandardCharsets.UTF_8, 0, "meta:utf-8")
+  private val MetaWin1252 = new Plan(Win1252, 0, "meta:windows-1252")
+
+  /** Steps 1–2 of the detection order; [[Undeclared]] when neither a BOM
+    * nor a meta declaration decides. Non-empty input only.
+    */
+  private[graft] def plan(bytes: Array[Byte]): Plan = {
+    // 1. BOM
+    if (bytes.length >= 3 && (bytes(0) & 0xff) == 0xef &&
+      (bytes(1) & 0xff) == 0xbb && (bytes(2) & 0xff) == 0xbf) return Utf8Bom
+    if (bytes.length >= 2 && (bytes(0) & 0xff) == 0xff && (bytes(1) & 0xff) == 0xfe)
+      return Utf16LeBom
+    if (bytes.length >= 2 && (bytes(0) & 0xff) == 0xfe && (bytes(1) & 0xff) == 0xff)
+      return Utf16BeBom
+    // 2. meta-declared
+    sniffMeta(bytes).flatMap(resolveLabel) match {
+      // WHATWG: a meta-declared UTF-16 label is remapped to UTF-8 — the
+      // prescan read the label through an ASCII-superset byte scan, which
+      // proves the document is NOT UTF-16; decoding as UTF-16 would garble
+      // the whole page
+      case Some(cs) if cs eq Win1252 => MetaWin1252
+      case Some(_) => MetaUtf8
+      case None => Undeclared
+    }
+  }
+
+  /** Decode under a final plan (not [[Undeclared]], whose validity the
+    * caller has settled).
+    */
+  private[graft] def decode(bytes: Array[Byte], p: Plan): Decoded =
+    Decoded(decodeWith(bytes, p.offset, p.cs), p.label)
+
   /** Charset-decision prefix of [[apply]] exposed for the byte-level fast
     * path (ByteTokenizer): when the fixed detection order lands on UTF-8,
     * returns the content offset (BOM skip) and the label [[apply]] WOULD
@@ -190,51 +239,91 @@ object Decode {
 
   def utf8Plan(bytes: Array[Byte]): Utf8Plan = {
     if (bytes == null || bytes.isEmpty) return null
-    if (bytes.length >= 3 && (bytes(0) & 0xff) == 0xef &&
-      (bytes(1) & 0xff) == 0xbb && (bytes(2) & 0xff) == 0xbf)
-      return new Utf8Plan(3, "utf-8-bom")
-    if (bytes.length >= 2 && ((bytes(0) & 0xff) == 0xff && (bytes(1) & 0xff) == 0xfe ||
-      (bytes(0) & 0xff) == 0xfe && (bytes(1) & 0xff) == 0xff)) return null // UTF-16 BOMs
-    sniffMeta(bytes).flatMap(resolveLabel) match {
-      case Some(cs) =>
-        // meta-declared UTF-16 remaps to UTF-8 (see apply), label "meta:utf-8"
-        if (cs == StandardCharsets.UTF_8 || cs == StandardCharsets.UTF_16LE ||
-          cs == StandardCharsets.UTF_16BE) new Utf8Plan(0, "meta:utf-8")
-        else null // windows-1252 family: decoded path
-      case None => new Utf8Plan(0, "utf-8") // label iff validation passes
-    }
+    val p = plan(bytes)
+    if (p.isUtf8) new Utf8Plan(p.offset, p.label) else null
   }
 
   /** Decode page bytes; returns decoded text + the charset label chosen. */
   def apply(bytes: Array[Byte]): Decoded = {
     if (bytes == null || bytes.isEmpty) return Decoded("", "empty")
-    // 1. BOM
-    if (bytes.length >= 3 && (bytes(0) & 0xff) == 0xef &&
-      (bytes(1) & 0xff) == 0xbb && (bytes(2) & 0xff) == 0xbf)
-      return Decoded(decodeWith(bytes, 3, StandardCharsets.UTF_8), "utf-8-bom")
-    if (bytes.length >= 2 && (bytes(0) & 0xff) == 0xff && (bytes(1) & 0xff) == 0xfe)
-      return Decoded(decodeWith(bytes, 2, StandardCharsets.UTF_16LE), "utf-16le-bom")
-    if (bytes.length >= 2 && (bytes(0) & 0xff) == 0xfe && (bytes(1) & 0xff) == 0xff)
-      return Decoded(decodeWith(bytes, 2, StandardCharsets.UTF_16BE), "utf-16be-bom")
-    // 2. meta-declared
-    sniffMeta(bytes).flatMap(resolveLabel) match {
-      case Some(cs0) =>
-        // WHATWG: a meta-declared UTF-16 label is remapped to UTF-8 — the
-        // prescan read the label through an ASCII-superset byte scan, which
-        // proves the document is NOT UTF-16; decoding as UTF-16 would garble
-        // the whole page
-        val cs =
-          if (cs0 == StandardCharsets.UTF_16LE || cs0 == StandardCharsets.UTF_16BE)
-            StandardCharsets.UTF_8
-          else cs0
-        val label = if (cs eq Win1252) "windows-1252" else cs.name().toLowerCase(java.util.Locale.ROOT)
-        return Decoded(decodeWith(bytes, 0, cs), s"meta:$label")
-      case None => ()
+    val p = plan(bytes)
+    if (p ne Undeclared) decode(bytes, p)
+    // 3. UTF-8 validation, 4. fallback
+    else if (isValidUtf8(bytes)) Decoded(new String(bytes, StandardCharsets.UTF_8), "utf-8")
+    else decode(bytes, Fallback)
+  }
+
+  // ---- windows-1252 → UTF-8: such a page is tokenized on the byte path,
+  // re-encoded once into a per-thread buffer
+
+  /** Per-thread transcode target: a call fills `bytes[0, len)`, and the next
+    * call on the same thread overwrites it. Nothing that escapes extraction
+    * points into it (block texts are fresh Strings).
+    */
+  private[graft] final class Utf8Buf {
+    var bytes = new Array[Byte](1 << 16)
+    var len = 0
+    // capacity for `need` bytes; a buffer grown past 1 MiB by one big page
+    // is dropped again at the next small one
+    private[Decode] def ensure(need: Int): Array[Byte] = {
+      if (bytes.length < need || bytes.length > (1 << 20) && need <= (1 << 18))
+        bytes = new Array[Byte](math.max(need, 1 << 16))
+      bytes
     }
-    // 3. UTF-8 validation
-    if (isValidUtf8(bytes))
-      return Decoded(new String(bytes, StandardCharsets.UTF_8), "utf-8")
-    // 4. fallback
-    Decoded(decodeWith(bytes, 0, Win1252), "windows-1252-fallback")
+  }
+  // larger inputs could overflow the 3-bytes-per-unit sizing; they stay on
+  // the String path
+  private final val MaxTranscodeUnits = (Int.MaxValue - 16) / 3
+  private val utf8TL: ThreadLocal[Utf8Buf] = ThreadLocal.withInitial(() => new Utf8Buf)
+
+  /** UTF-8 encoding of each windows-1252 byte 0x80..0xFF, taken from the
+    * JDK decoder itself (so it matches [[apply]] exactly, U+FFFD for the
+    * five undefined bytes included): the bytes packed high to low in bits
+    * 0..23, their count in bits 24..31.
+    */
+  private val Win1252Utf8: Array[Int] = Array.tabulate(128) { k =>
+    val u = new String(Array((k + 0x80).toByte), Win1252).getBytes(StandardCharsets.UTF_8)
+    var packed = 0
+    u.foreach(b => packed = (packed << 8) | (b & 0xff))
+    (u.length << 24) | packed
+  }
+
+  private final val HIGH = 0x8080808080808080L
+
+  /** windows-1252 bytes → UTF-8, straight from the bytes (no intermediate
+    * String). The result decodes to exactly `new String(src, windows-1252)`,
+    * one UTF-16 unit per source byte. Null only past the sizing limit.
+    */
+  private[graft] def win1252ToUtf8(src: Array[Byte]): Utf8Buf = {
+    val n = src.length
+    if (n > MaxTranscodeUnits) return null
+    val buf = utf8TL.get()
+    val dst = buf.ensure(3 * n)
+    val bb = ByteBuffer.wrap(src).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    var i = 0
+    var o = 0
+    while (i < n) {
+      if (src(i) >= 0) {
+        // ASCII run: one arraycopy, extent found a word at a time
+        var j = i + 1
+        while (j + 8 <= n && (bb.getLong(j) & HIGH) == 0L) j += 8
+        while (j < n && src(j) >= 0) j += 1
+        System.arraycopy(src, i, dst, o, j - i)
+        o += j - i
+        i = j
+      } else {
+        val e = Win1252Utf8(src(i) & 0x7f)
+        val len = e >>> 24
+        if (len == 2) {
+          dst(o) = (e >>> 8).toByte; dst(o + 1) = e.toByte
+        } else {
+          dst(o) = (e >>> 16).toByte; dst(o + 1) = (e >>> 8).toByte; dst(o + 2) = e.toByte
+        }
+        o += len
+        i += 1
+      }
+    }
+    buf.len = o
+    buf
   }
 }

@@ -54,7 +54,9 @@ object ExtractJob {
         val doc = Extract(PageRow(url, null, html, null, null), cfg)
         docCount += 1
         htmlBytes += doc.stats.htmlBytes
-        textBytes += doc.extracted_text.length.toLong
+        // UTF-8 bytes, as `octet_length` counts them (Bench): a UTF-16
+        // length under-counts every accented doc
+        if (acc != null) textBytes += utf8Length(doc.extracted_text)
         if (doc.status != Status.Ok) quarantined += 1
         doc
       }
@@ -79,6 +81,26 @@ object ExtractJob {
         def next(): ExtractedDoc = out.next()
       }
     }
+  }
+
+  /** Byte length of `s` in UTF-8 as Spark stores it, without encoding it: a
+    * surrogate pair is 4 bytes and a lone surrogate 1 (the encoder writes
+    * '?' for it).
+    */
+  private[graft] def utf8Length(s: String): Long = {
+    var n = 0L
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c < 0x80) n += 1
+      else if (c < 0x800) n += 2
+      else if (Character.isHighSurrogate(c) && i + 1 < s.length &&
+        Character.isLowSurrogate(s.charAt(i + 1))) { n += 4; i += 1 }
+      else if (Character.isSurrogate(c)) n += 1
+      else n += 3
+      i += 1
+    }
+    n
   }
 
   /** Exactly-once lineage view over at-least-once accumulator rows: one row

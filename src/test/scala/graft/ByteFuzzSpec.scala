@@ -11,26 +11,34 @@ import scala.util.Random
   * at arbitrary positions (mid-word-lane, mid-entity, mid-sequence) that a
   * fragment composer cannot reach:
   *
-  *   - tokenizer level: whenever the doc is byte-path eligible,
-  *     `ByteTokenizer(bytes)` must equal `HtmlTokenizer(Decode(bytes).text)`
-  *     block-for-block (truncated flag included);
+  *   - tokenizer level: `ByteTokenizer` must equal
+  *     `HtmlTokenizer(Decode(bytes).text)` block-for-block (truncated flag
+  *     included), over the bytes in place when they are on the UTF-8 plan
+  *     and over the decoded text re-encoded as UTF-8 otherwise (the
+  *     pipeline's transcoded path);
   *   - pipeline level: for EVERY doc — valid or invalid UTF-8, eligible or
   *     fallback — `Extract.apply == Extract.applyDecoded` and neither throws.
   *
   * The generator intentionally produces invalid UTF-8 some of the time; those
-  * docs exercise the prescan-reject → decoded-String fallback seam, which is
-  * as much a part of the contract as the fast path itself.
+  * docs exercise the prescan-reject → transcode seam, which is as much a
+  * part of the contract as the fast path itself. Latin letters next to
+  * combining marks (raw and as entities) pin the split between the fused
+  * Latin flush and the raw/NFC flush.
   */
 class ByteFuzzSpec extends AnyFunSuite {
 
   private def assertBlocksEqual(url: String, bytes: Array[Byte]): Unit = {
-    val plan = Decode.utf8Plan(bytes)
-    if (plan == null) return
-    val ps = ByteTokenizer.prescan(bytes, plan.offset)
-    if (!ps.valid || ps.utf16Len > HtmlTokenizer.DefaultCaps.maxChars) return
     val dec = Decode(bytes)
+    if (dec.text.length > HtmlTokenizer.DefaultCaps.maxChars) return // String path
+    val plan = Decode.utf8Plan(bytes)
+    val inPlace = plan != null && ByteTokenizer.prescan(bytes, plan.offset).valid
+    val (u8, off) =
+      if (inPlace) (bytes, plan.offset)
+      else (dec.text.getBytes(java.nio.charset.StandardCharsets.UTF_8), 0)
+    val ps = ByteTokenizer.prescan(u8, off)
+    assert(ps.valid, s"$url: prescan valid")
     assert(ps.utf16Len == dec.text.length, s"$url: utf16Len")
-    val bt = ByteTokenizer(bytes, plan.offset)
+    val bt = ByteTokenizer(u8, off)
     val ct = HtmlTokenizer(dec.text)
     assert(bt.truncated == ct.truncated, s"$url: truncated")
     assert(bt.blocks.length == ct.blocks.length,
@@ -60,7 +68,8 @@ class ByteFuzzSpec extends AnyFunSuite {
       "style", "textarea", "title", "head", "body", "html", "table", "td",
       "tr", "br", "img", "svg", "noscript", "h1", "blockquote", "custom-x")
     val ents = Array("&amp;", "&lt;", "&gt;", "&nbsp;", "&#233;", "&#x20AC;",
-      "&#x1F600;", "&quot;", "&apos;", "&shy;", "&#8203;", "&mdash;")
+      "&#x1F600;", "&quot;", "&apos;", "&shy;", "&#8203;", "&mdash;",
+      "&eacute;", "&#x301;")
     val n = 20 + rng.nextInt(300)
     var k = 0
     while (k < n) {
@@ -98,9 +107,12 @@ class ByteFuzzSpec extends AnyFunSuite {
           s(pick(rng, Array("<!-- c <p>x</p> -->", "<!-- open",
             "<!DOCTYPE html>", "<?pi x?>", "<![CDATA[y]]>")))
         case 18 =>
-          // 2-byte UTF-8: latin-1 letters, NEL, C1-ish
+          // 2-byte UTF-8: latin letters up to the last char below U+0300,
+          // combining marks from U+0300 (after a letter: raw/NFC flush), NEL,
+          // C1-ish, Greek
           s(pick(rng, Array("\u00e9", "\u00fc", "\u0085", "\u00a0",
-            "\u00ad", "\u0391")))
+            "\u00ad", "\u0391", "\u0153", "\u017f", "\u02ff", "\u0300",
+            "\u0301", "\u0340")))
         case 19 =>
           // 3-byte UTF-8: CJK, line/para sep, zero-width, FFFD, bidi
           s(pick(rng, Array("\u4e16", "\u2028", "\u2029", "\u200b",
@@ -147,23 +159,41 @@ class ByteFuzzSpec extends AnyFunSuite {
 
   test("Extract equivalence + never-throw on 600 byte-soup documents (invalid UTF-8 included)") {
     val rng = new Random(0xf00dfeedL)
+    def check(url: String, bytes: Array[Byte]): Unit = {
+      assertBlocksEqual(url, bytes)
+      val row = graft.core.PageRow(url, new java.sql.Timestamp(0L), bytes, "", "en")
+      val a = Extract(row)
+      val b = Extract.applyDecoded(row)
+      assert(a.status == b.status, s"$url: status ${a.status} vs ${b.status}")
+      assert(a.extracted_text == b.extracted_text, s"$url: text")
+      assert(a.spans.toSeq == b.spans.toSeq, s"$url: spans")
+      assert(a.stats == b.stats, s"$url: stats\n ${a.stats}\n ${b.stats}")
+    }
     var k = 0
     var fellBack = 0
+    var utf16 = 0
     while (k < 600) {
       val bytes = soup(rng, allowInvalid = true)
       val plan = Decode.utf8Plan(bytes)
       if (plan == null || !ByteTokenizer.prescan(bytes, plan.offset).valid) fellBack += 1
-      val row = graft.core.PageRow(s"soup-x-$k", new java.sql.Timestamp(0L), bytes, "", "en")
-      val a = Extract(row)
-      val b = Extract.applyDecoded(row)
-      assert(a.status == b.status, s"soup-x-$k: status ${a.status} vs ${b.status}")
-      assert(a.extracted_text == b.extracted_text, s"soup-x-$k: text")
-      assert(a.spans.toSeq == b.spans.toSeq, s"soup-x-$k: spans")
-      assert(a.stats == b.stats, s"soup-x-$k: stats\n ${a.stats}\n ${b.stats}")
+      check(s"soup-x-$k", bytes)
+      // every tenth soup once more, as UTF-16 behind a BOM (an extra input:
+      // the raw soup above is checked either way)
+      if (k % 10 == 9) {
+        val le = k % 20 == 9
+        val text = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
+        val u16 = (if (le) Array(0xff, 0xfe) else Array(0xfe, 0xff)).map(_.toByte) ++
+          text.getBytes(if (le) java.nio.charset.StandardCharsets.UTF_16LE
+            else java.nio.charset.StandardCharsets.UTF_16BE)
+        assert(Decode.utf8Plan(u16) == null, s"soup-x-$k-utf16: plan")
+        check(s"soup-x-$k-utf16", u16)
+        utf16 += 1
+      }
       k += 1
     }
     // the invalid-UTF-8 fallback seam must actually fire in this corpus
     assert(fellBack >= 50, s"only $fellBack/600 docs hit the fallback seam")
+    assert(utf16 == 60)
   }
 
   test("lane-boundary torture: specials at every offset mod 8") {

@@ -13,7 +13,9 @@ import scala.util.Random
   *   1. tokenizer level — `ByteTokenizer(bytes) == HtmlTokenizer(Decode(bytes)
   *      .text)` block-for-block on every fixture corpus and on randomized
   *      adversarial documents (entities, non-ASCII, malformed markup,
-  *      raw-text traps, astral chars);
+  *      raw-text traps, astral chars); a page off the UTF-8 plan (cp1252,
+  *      UTF-16 BOM, declared UTF-8 repaired with REPLACE) is compared as the
+  *      pipeline tokenizes it — its decoded text re-encoded as UTF-8;
   *   2. prescan level — utf16 length and garbage count match the decoded
   *      string's `length` / `Quality.garbageRatio` numerator;
   *   3. pipeline level — `Extract.apply == Extract.applyDecoded` on every
@@ -25,11 +27,16 @@ import scala.util.Random
 class ByteTokenizerSpec extends AnyFunSuite {
 
   private def assertBlocksEqual(url: String, bytes: Array[Byte]): Unit = {
-    val plan = Decode.utf8Plan(bytes)
-    if (plan == null) return // decoded path only; nothing to compare
-    val ps = ByteTokenizer.prescan(bytes, plan.offset)
     val dec = Decode(bytes)
-    if (!ps.valid || ps.utf16Len > HtmlTokenizer.DefaultCaps.maxChars) return
+    if (dec.text.length > HtmlTokenizer.DefaultCaps.maxChars) return // String path
+    val plan = Decode.utf8Plan(bytes)
+    val inPlace = plan != null && ByteTokenizer.prescan(bytes, plan.offset).valid
+    // off the UTF-8 plan, the byte path reads the decoded text as UTF-8
+    val (u8, off) =
+      if (inPlace) (bytes, plan.offset)
+      else (dec.text.getBytes(StandardCharsets.UTF_8), 0)
+    val ps = ByteTokenizer.prescan(u8, off)
+    assert(ps.valid, s"$url: prescan valid")
     // prescan equivalence
     assert(ps.utf16Len == dec.text.length, s"$url: utf16Len")
     val expBad = {
@@ -44,7 +51,7 @@ class ByteTokenizerSpec extends AnyFunSuite {
     }
     assert(ps.garbage == expBad, s"$url: garbage count")
     // tokenizer equivalence
-    val bt = ByteTokenizer(bytes, plan.offset)
+    val bt = ByteTokenizer(u8, off)
     val ct = HtmlTokenizer(dec.text)
     assert(bt.truncated == ct.truncated, s"$url: truncated")
     assert(bt.blocks.length == ct.blocks.length,
@@ -57,13 +64,15 @@ class ByteTokenizerSpec extends AnyFunSuite {
     }
   }
 
-  private def assertExtractEqual(f: FixtureGen.Fixture): Unit = {
-    val a = Extract(f.page)
-    val b = Extract.applyDecoded(f.page)
-    assert(a.status == b.status, s"${f.page.url}: status")
-    assert(a.extracted_text == b.extracted_text, s"${f.page.url}: text")
-    assert(a.spans.toSeq == b.spans.toSeq, s"${f.page.url}: spans")
-    assert(a.stats == b.stats, s"${f.page.url}: stats\n ${a.stats}\n ${b.stats}")
+  private def assertExtractEqual(f: FixtureGen.Fixture): Unit = assertExtractEqual(f.page)
+
+  private def assertExtractEqual(page: graft.core.PageRow): Unit = {
+    val a = Extract(page)
+    val b = Extract.applyDecoded(page)
+    assert(a.status == b.status, s"${page.url}: status")
+    assert(a.extracted_text == b.extracted_text, s"${page.url}: text")
+    assert(a.spans.toSeq == b.spans.toSeq, s"${page.url}: spans")
+    assert(a.stats == b.stats, s"${page.url}: stats\n ${a.stats}\n ${b.stats}")
   }
 
   test("tokenizer + prescan equivalence across all fixture corpora") {
@@ -152,6 +161,102 @@ class ByteTokenizerSpec extends AnyFunSuite {
       assertBlocksEqual(s"random-$k", doc.getBytes(StandardCharsets.UTF_8))
       k += 1
     }
+  }
+
+  test("transcoded path: cp1252, UTF-16 BOM and REPLACE pages tokenize like their decoded text") {
+    // the randomized documents in every encoding the pipeline transcodes:
+    // a page's bytes differ per encoding, its decoded text (and so the
+    // reference tokenization, offsets included) only where the encoding
+    // cannot represent a char
+    val rng = new Random(20261017L)
+    val cp1252 = java.nio.charset.Charset.forName("windows-1252")
+    val labels = scala.collection.mutable.Set.empty[String]
+    var k = 0
+    while (k < 200) {
+      val doc = randomDoc(rng)
+      val variants = Seq(
+        doc.getBytes(cp1252), // undeclared: windows-1252 fallback
+        ("<meta charset=\"windows-1252\">" + doc).getBytes(cp1252),
+        ("<meta charset=\"utf-8\">" + doc).getBytes(cp1252), // REPLACE
+        Array(0xef, 0xbb, 0xbf).map(_.toByte) ++ // BOM UTF-8 with a bad byte
+          (doc + "\u00e9").getBytes(StandardCharsets.UTF_8).dropRight(1),
+        Array(0xff, 0xfe).map(_.toByte) ++ doc.getBytes(StandardCharsets.UTF_16LE),
+        Array(0xfe, 0xff).map(_.toByte) ++ doc.getBytes(StandardCharsets.UTF_16BE))
+      variants.zipWithIndex.foreach { case (b, v) =>
+        labels += Decode(b).charset
+        assertBlocksEqual(s"transcoded-$k-$v", b)
+        assertExtractEqual(graft.core.PageRow(s"transcoded-$k-$v",
+          new java.sql.Timestamp(0L), b, "", "en"))
+      }
+      k += 1
+    }
+    assert(Set("windows-1252-fallback", "meta:windows-1252", "meta:utf-8",
+      "utf-8-bom", "utf-16le-bom", "utf-16be-bom").subsetOf(labels), labels)
+  }
+
+  test("over-cap pages take the String path (truncated) in every encoding") {
+    val cfg = Extract.Config(caps = HtmlTokenizer.Caps(maxChars = 120))
+    val doc = "<html><body><p>caf\u00e9 cr\u00e8me " + ("word " * 60) +
+      "</p><p>tail</p></body></html>"
+    val cp1252 = java.nio.charset.Charset.forName("windows-1252")
+    Seq(doc.getBytes(StandardCharsets.UTF_8), doc.getBytes(cp1252),
+      ("<meta charset=\"utf-8\">" + doc).getBytes(cp1252),
+      Array(0xff, 0xfe).map(_.toByte) ++ doc.getBytes(StandardCharsets.UTF_16LE))
+      .zipWithIndex.foreach { case (b, v) =>
+        val row = graft.core.PageRow(s"cap-$v", new java.sql.Timestamp(0L), b, "", "en")
+        val a = Extract(row, cfg)
+        val d = Extract.applyDecoded(row, cfg)
+        assert(a.stats.truncated, s"cap-$v")
+        assert(a.status == d.status && a.extracted_text == d.extracted_text &&
+          a.spans.toSeq == d.spans.toSeq && a.stats == d.stats, s"cap-$v")
+      }
+  }
+
+  test("windows-1252 transcodes straight to the JDK decoder's chars, all 256 bytes") {
+    val cp1252 = java.nio.charset.Charset.forName("windows-1252")
+    (0 until 256).foreach { v =>
+      val b = Array(v.toByte)
+      val u8 = Decode.win1252ToUtf8(b)
+      assert(new String(u8.bytes, 0, u8.len, StandardCharsets.UTF_8) ==
+        new String(b, cp1252), f"byte 0x$v%02x")
+    }
+    // every byte value between and inside ASCII runs of every length around
+    // the 8-byte word scan
+    val sb = new java.io.ByteArrayOutputStream()
+    (0 until 256).foreach { v =>
+      (0 until v % 19).foreach(i => sb.write('a' + i % 26))
+      sb.write(v)
+    }
+    val mixed = sb.toByteArray
+    val u8 = Decode.win1252ToUtf8(mixed)
+    assert(java.util.Arrays.equals(java.util.Arrays.copyOf(u8.bytes, u8.len),
+      new String(mixed, cp1252).getBytes(StandardCharsets.UTF_8)))
+  }
+
+  test("UTF-16 pages with unpaired surrogates decode to U+FFFD, never a lone surrogate") {
+    // the premise that lets the pipeline re-encode decoded text with
+    // getBytes (which would turn a lone surrogate into '?'): the JDK
+    // decoders REPLACE an unpaired surrogate
+    def u16le(units: Int*): Array[Byte] =
+      Array(0xff, 0xfe).map(_.toByte) ++ units.flatMap(u => Seq(u.toByte, (u >> 8).toByte))
+    def u16be(units: Int*): Array[Byte] =
+      Array(0xfe, 0xff).map(_.toByte) ++ units.flatMap(u => Seq((u >> 8).toByte, u.toByte))
+    val units = "<p>a".map(_.toInt) ++ Seq(0xd800, 'b'.toInt, 0xdc00, 0xd83d, 0xde00,
+      'c'.toInt, 0xdbff) ++ "</p>".map(_.toInt) ++ Seq(0xd800)
+    Seq(u16le(units: _*), u16be(units: _*), u16le(units: _*) :+ 'x'.toByte)
+      .zipWithIndex.foreach { case (b, v) =>
+        val t = Decode(b).text
+        assert(!t.indices.exists { i =>
+          val c = t.charAt(i)
+          (Character.isHighSurrogate(c) &&
+            (i + 1 >= t.length || !Character.isLowSurrogate(t.charAt(i + 1)))) ||
+          (Character.isLowSurrogate(c) &&
+            (i == 0 || !Character.isHighSurrogate(t.charAt(i - 1))))
+        }, s"lone-$v: $t")
+        assert(t.contains("\ufffd") && t.contains("\ud83d\ude00"), s"lone-$v: $t")
+        assertBlocksEqual(s"lone-$v", b)
+        assertExtractEqual(graft.core.PageRow(s"lone-$v", new java.sql.Timestamp(0L), b, "", "en"))
+      }
   }
 
   test("whitespace-torture equivalence (hole-patched bulk copy paths)") {

@@ -50,6 +50,29 @@ class ScaleFixesSpec extends AnyFunSuite {
     assert(pages.rdd.getNumPartitions == spark.sparkContext.defaultParallelism * 2)
   }
 
+  test("lineage text_bytes counts UTF-8 bytes, as octet_length does") {
+    import spark.implicits._
+    val html = "<html><body><p>Un caf\u00e9 cr\u00e8me, s'il vous pla\u00eet, " +
+      "avec une \u0153uvre d'art et un \ud83d\ude00 sourire.</p></body></html>"
+    val pages = Seq(graft.core.PageRow("u-cafe", new java.sql.Timestamp(0L),
+      html.getBytes(java.nio.charset.StandardCharsets.UTF_8), "", "fr"))
+      .toDS().repartition(1)
+    val acc = ExtractJob.newLineageAcc(spark, "lin-utf8")
+    val text = ExtractJob.extract(pages, runId = "runU", lineageAcc = acc)
+      .collect().head.extracted_text
+    assert(text.contains("caf\u00e9"))
+    import scala.jdk.CollectionConverters._
+    val lineage = ExtractJob.dedupeLineage(acc.value.asScala.toSeq)
+    val utf8 = text.getBytes(java.nio.charset.StandardCharsets.UTF_8).length.toLong
+    assert(utf8 > text.length)
+    assert(lineage.map(_.text_bytes).sum == utf8)
+    // the count is Spark's own octet_length of the same string
+    assert(Seq(text).toDF("t").select(octet_length(col("t"))).head.getInt(0) == utf8)
+    // a lone surrogate is one byte ('?') in Spark's UTF-8 form
+    assert(ExtractJob.utf8Length("a\ud800b") ==
+      Seq("a\ud800b").toDF("t").select(octet_length(col("t"))).head.getInt(0))
+  }
+
   test("lineage dedupe: retried partition supersedes, never adds") {
     val t = new java.sql.Timestamp(0L)
     val rows = Seq(

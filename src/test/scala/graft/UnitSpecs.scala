@@ -58,6 +58,26 @@ class CanonSpec extends AnyFunSuite {
   test("NFC normalization") {
     assert(Canon("é") == "é") // e + combining acute → é
   }
+  test("every pair of code points below U+0300 is already NFC") {
+    // the premise of ByteTokenizer's fused Latin flush, which skips the NFC
+    // pass for blocks whose visible chars are all below U+0300
+    val pair = new Array[Char](2)
+    var a = 0
+    while (a < 0x300) {
+      pair(0) = a.toChar
+      var b = 0
+      while (b < 0x300) {
+        pair(1) = b.toChar
+        val s = new String(pair)
+        assert(java.text.Normalizer.isNormalized(s, java.text.Normalizer.Form.NFC),
+          f"U+$a%04X U+$b%04X")
+        b += 1
+      }
+      a += 1
+    }
+    // and U+0300 is the first code point that breaks it after a letter
+    assert(!java.text.Normalizer.isNormalized("e\u0300", java.text.Normalizer.Form.NFC))
+  }
   test("control chars removed") { assert(Canon("abc") == "abc") }
   test("token count") {
     assert(Canon.tokenCount("") == 0)
