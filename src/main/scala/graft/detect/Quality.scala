@@ -15,8 +15,11 @@ object Quality {
     * the decoded text — encoding/binary damage measure (guards the decode
     * edge; binary payloads masquerading as html are control-dense).
     */
-  def garbageRatio(decoded: String): Double = {
-    if (decoded.isEmpty) return 0.0
+  def garbageRatio(decoded: String): Double =
+    if (decoded.isEmpty) 0.0 else garbageCount(decoded).toDouble / decoded.length
+
+  /** The numerator of [[garbageRatio]]. */
+  def garbageCount(decoded: String): Int = {
     var bad = 0
     var i = 0
     while (i < decoded.length) {
@@ -26,18 +29,12 @@ object Quality {
         (c == '�' || graft.text.Canon.isControl(c))) bad += 1
       i += 1
     }
-    bad.toDouble / decoded.length
+    bad
   }
 
   /** Score #1 (LAPM analogue, blurDetection.cpp:32-47): parseability — the
-    * fraction of decoded chars that survived into block text. Low values
-    * mean tag soup / binary junk.
-    */
-  def parseability(decoded: String, blocks: Array[Block]): Double =
-    parseability(decoded.length, blocks)
-
-  /** Same score from the decoded UTF-16 length alone (the byte fast path
-    * never materializes the decoded string).
+    * fraction of decoded chars that survived into block text, from the
+    * decoded UTF-16 length. Low values mean tag soup / binary junk.
     */
   def parseability(decodedLen: Int, blocks: Array[Block]): Double = {
     if (decodedLen == 0) return 0.0

@@ -67,8 +67,7 @@ object VariantAnchor {
       else {
         delta += f.page.url
         // integrity: every output line is a complete block text of the page
-        val dec = graft.html.Decode(f.page.html)
-        val blocks = graft.html.HtmlTokenizer(dec.text).blocks.map(_.text)
+        val blocks = graft.html.Decode.utf8(f.page.html).tokenize().blocks.map(_.text)
         val blockSet = blocks.toSet
         doc.extracted_text.split('\n').foreach { line =>
           if (line.nonEmpty && !blockSet.contains(line))

@@ -4,13 +4,12 @@ import graft.core.Block
 import graft.text.Canon
 import scala.collection.mutable.ArrayBuffer
 
-/** Byte-level HTML → block tokenizer — the pipeline's tokenizer for every
-  * decodable page under the char cap (VERDICT r4 item 1: tokenize is 75% of
-  * extraction CPU and the char-path costs are memory traffic — decode to
-  * UTF-16 doubles every load, and each content block is copied through two
-  * StringBuilders before Canon returns). UTF-8 pages are tokenized in
-  * place; any other page is transcoded to UTF-8 once first
-  * (pipeline/Extract.scala).
+/** Byte-level HTML → block tokenizer — the pipeline's only tokenizer
+  * (VERDICT r4 item 1: tokenize is 75% of extraction CPU and the char-path
+  * costs are memory traffic — decode to UTF-16 doubles every load, and each
+  * content block is copied through two StringBuilders before Canon
+  * returns). Every page reaches it as UTF-8 through one charset route
+  * ([[Decode.utf8]]): UTF-8 pages in place, any other page transcoded once.
   *
   * This is the integral-image discipline of the reference applied to the
   * tokenizer itself (binarizeSauvola.cpp:72-90: restate the same computation
@@ -21,10 +20,11 @@ import scala.collection.mutable.ArrayBuffer
   * buffer in ONE fused pass (whitespace collapse + control strip + link-run
   * char/token counts), producing exactly one String per block.
   *
-  * SEMANTICS ARE IDENTICAL to [[HtmlTokenizer]] over the decoded text — the
-  * contract is `ByteTokenizer(bytes) == HtmlTokenizer(Decode(bytes).text)`
-  * field-for-field, property-tested across every fixture corpus and a
-  * random-document differential suite (ByteTokenizerSpec). Each block is
+  * SEMANTICS are the [[HtmlTokenizer]] spec over the decoded text: the
+  * contract is `ByteTokenizer(bytes) == tokenizing Decode(bytes).text`
+  * field-for-field with the String reference tokenizer kept in the tests,
+  * property-tested across every fixture corpus, every char-cap cut and
+  * random documents (ByteTokenizerSpec, ByteFuzzSpec). Each block is
   * flushed by one of three routes, chosen by its VISIBLE chars (invisible
   * ones — whitespace, zero-width, controls — are collapsed or stripped on
   * every route):
@@ -32,17 +32,17 @@ import scala.collection.mutable.ArrayBuffer
   *   - all below U+0300 (Latin script): a fused flush into a char buffer,
   *     the same state machine per decoded char — such text is already NFC;
   *   - anything else (combining marks, CJK, U+FFFD, astral): materialize
-  *     the same intermediate string the char path builds and run the char
-  *     path's own flush logic, NFC pass included.
+  *     the intermediate block string and canonicalize it with
+  *     `HtmlTokenizer.canonRaw`, NFC pass included.
   *
   * Offsets: `Block.startOff`/`endOff`/spans are CHAR offsets into the
   * decoded text (the public contract, core/schema.scala:27). The scanner
   * maintains the running UTF-16 offset alongside the byte offset — each
   * non-continuation byte advances it by 1, each 4-byte lead by 2 (surrogate
-  * pair). Eligibility (valid UTF-8, under the char cap) is established by
-  * [[prescan]] before this tokenizer runs: a page that is not valid UTF-8
-  * is transcoded to it first, and only an over-cap page takes the
-  * decoded-String path.
+  * pair). The input must be valid UTF-8 (established by [[prescan]]). The
+  * char cap is a byte cut made before the scan: the end of the longest
+  * prefix of at most `maxChars` UTF-16 units, so a 4-byte sequence it
+  * would split is left out whole.
   */
 object ByteTokenizer {
 
@@ -93,8 +93,8 @@ object ByteTokenizer {
   private final val KLatin = 1 // fused char flush: all below U+0300
   private final val KRaw = 2 // raw string + Canon (NFC)
 
-  /** One fused validation pass: strict UTF-8 validity (same automaton as
-    * Decode.isValidUtf8), decoded UTF-16 length, and the garbage-char count
+  /** One fused validation pass: strict UTF-8 validity (the engine's only
+    * UTF-8 validator), decoded UTF-16 length, and the garbage-char count
     * (U+FFFD + non-whitespace control chars, Quality.garbageRatio's
     * numerator) — everything the pipeline needs to gate BEFORE tokenizing,
     * without materializing the decoded string.
@@ -231,12 +231,12 @@ object ByteTokenizer {
     new ByteRun(bytes, off, end, caps).run()
 
   private final class ByteRun(bytes: Array[Byte], off: Int, end: Int, caps: HtmlTokenizer.Caps) {
-    private val nB = end
+    private val nB = capEnd()
     private val view = new AsciiView(bytes, nB)
     private val scratch = scratchTL.get()
     private var blockBuf = scratch.blockBuf
     private var blockN = 0
-    private var truncated = false
+    private var truncated = nB < end
     // little-endian word view for the SWAR scan loops (HeapByteBuffer.getLong
     // is an intrinsic); bulkEnd = last index where a full word fits
     private val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
@@ -252,7 +252,7 @@ object ByteTokenizer {
       blockN += 1
     }
 
-    // element stack + flags — semantics identical to the char Run's
+    // element stack + flags — semantics identical to the String reference's
     // ArrayBuffer stack, restated as flat arrays so pops are truncation
     // (no element shifting) and the <body>-closes-<head> rule reads a
     // counter instead of an O(depth) boxed contains (both showed up in the
@@ -316,10 +316,10 @@ object ByteTokenizer {
     // decoded text, i.e. excluding a BOM)
     private var cOff = 0
 
-    // ---- per-block segment list (replaces the char Run's StringBuilder).
+    // ---- per-block segment list (replaces the reference's StringBuilder).
     // A segment is either a source byte range [segFrom, segTo) or a decoded
     // entity (segFrom = -(index into segStr) - 1). segLink holds its
-    // linkId, which mirrors the char Run's link-run
+    // linkId, which mirrors the String reference's link-run
     // open/close protocol: one id per beginLinkRun..endLinkRun window.
     private var segFrom = scratch.segFrom
     private var segTo = scratch.segTo
@@ -875,9 +875,9 @@ object ByteTokenizer {
       }
 
     /** Fallback flush for blocks with non-ASCII content: materialize the
-      * SAME intermediate string + link runs the char Run builds, then run
-      * the char path's flush logic (Canon with NFC, canonCountAscii with
-      * Canon fallback) via the shared builder.
+      * block's intermediate string + link runs, then canonicalize them
+      * (Canon with NFC, canonCountAscii with Canon fallback) via the shared
+      * builder.
       */
     private def flushViaRaw(): Unit = {
       val raw = new java.lang.StringBuilder(approxChars)
@@ -991,6 +991,18 @@ object ByteTokenizer {
       */
     @inline private def unitsOf(b: Int): Int =
       if ((b & 0xc0) == 0x80) 0 else if (b >= 0xf0 && b < 0xf5) 2 else 1
+
+    /** The char cap's byte cut: the end of the longest prefix of at most
+      * `caps.maxChars` UTF-16 units, on a code-point boundary (a unit takes
+      * at least one byte, so only a page longer than the cap is walked).
+      */
+    private def capEnd(): Int = {
+      if (end - off <= caps.maxChars) return end
+      var i = off
+      var units = 0L
+      while (i < end && { units += unitsOf(bytes(i) & 0xff); units <= caps.maxChars }) i += 1
+      i
+    }
 
     /** Scan bytes [from, limit) for ASCII `ch`, advancing cOff; returns the
       * byte index (cOff = offset AT that index) or -1 (cOff at limit).

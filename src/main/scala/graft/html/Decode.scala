@@ -3,9 +3,11 @@ package graft.html
 import java.nio.charset.{Charset, CodingErrorAction, StandardCharsets}
 import java.nio.ByteBuffer
 
-/** Charset sniffing + decode of raw page bytes to a UTF-16 String, and the
-  * windows-1252 → UTF-8 transcode that puts those pages on the byte
-  * tokenizer straight from their bytes.
+/** Charset sniffing, and the one charset route of the engine: [[utf8]]
+  * turns any page into the UTF-8 bytes [[ByteTokenizer]] reads — a UTF-8
+  * page in place, a windows-1252 page transcoded straight from its bytes,
+  * any other page decoded and re-encoded. [[apply]] decodes to a UTF-16
+  * String, the text whose char offsets the engine reports.
   *
   * Transplant of the reference's lossless representation converters
   * (formatConvert.cpp:38-109 opencv→leptonica and :111-219 back): a
@@ -26,7 +28,7 @@ object Decode {
 
   final case class Decoded(text: String, charset: String)
 
-  private[graft] val Win1252 = Charset.forName("windows-1252")
+  private val Win1252 = Charset.forName("windows-1252")
 
   /** Charset label normalization (subset of the WHATWG encoding registry that
     * our fixtures + common crawl pages realistically use). ISO-8859-1 is
@@ -141,37 +143,6 @@ object Decode {
     (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') ||
       c == '-' || c == '_' || c == '.' || c == ':'
 
-  /** Strict UTF-8 validation without decoding twice. */
-  def isValidUtf8(bytes: Array[Byte]): Boolean = {
-    var i = 0
-    val n = bytes.length
-    while (i < n) {
-      val b = bytes(i) & 0xff
-      if (b < 0x80) i += 1
-      else if (b < 0xc2) return false // continuation or overlong lead
-      else if (b < 0xe0) { // 2-byte
-        if (i + 1 >= n || (bytes(i + 1) & 0xc0) != 0x80) return false
-        i += 2
-      } else if (b < 0xf0) { // 3-byte
-        if (i + 2 >= n) return false
-        val b1 = bytes(i + 1) & 0xff; val b2 = bytes(i + 2) & 0xff
-        val lo = if (b == 0xe0) 0xa0 else 0x80
-        val hi = if (b == 0xed) 0x9f else 0xbf // exclude surrogates
-        if (b1 < lo || b1 > hi || (b2 & 0xc0) != 0x80) return false
-        i += 3
-      } else if (b < 0xf5) { // 4-byte
-        if (i + 3 >= n) return false
-        val b1 = bytes(i + 1) & 0xff
-        val lo = if (b == 0xf0) 0x90 else 0x80
-        val hi = if (b == 0xf4) 0x8f else 0xbf
-        if (b1 < lo || b1 > hi) return false
-        if ((bytes(i + 2) & 0xc0) != 0x80 || (bytes(i + 3) & 0xc0) != 0x80) return false
-        i += 4
-      } else return false
-    }
-    true
-  }
-
   private def decodeWith(bytes: Array[Byte], offset: Int, cs: Charset): String =
     // the String constructor REPLACEs malformed input and unmappable chars
     // exactly like the previous explicit CharsetDecoder (JLS-specified), but
@@ -187,12 +158,12 @@ object Decode {
     * is windows-1252 ([[Fallback]]). Every other plan is final: malformed
     * input under it decodes to U+FFFD (REPLACE).
     */
-  private[graft] final class Plan(val cs: Charset, val offset: Int, val label: String) {
+  private final class Plan(val cs: Charset, val offset: Int, val label: String) {
     def isUtf8: Boolean = cs eq StandardCharsets.UTF_8
   }
 
-  private[graft] val Undeclared = new Plan(StandardCharsets.UTF_8, 0, "utf-8")
-  private[graft] val Fallback = new Plan(Win1252, 0, "windows-1252-fallback")
+  private val Undeclared = new Plan(StandardCharsets.UTF_8, 0, "utf-8")
+  private val Fallback = new Plan(Win1252, 0, "windows-1252-fallback")
   private val Utf8Bom = new Plan(StandardCharsets.UTF_8, 3, "utf-8-bom")
   private val Utf16LeBom = new Plan(StandardCharsets.UTF_16LE, 2, "utf-16le-bom")
   private val Utf16BeBom = new Plan(StandardCharsets.UTF_16BE, 2, "utf-16be-bom")
@@ -202,7 +173,7 @@ object Decode {
   /** Steps 1–2 of the detection order; [[Undeclared]] when neither a BOM
     * nor a meta declaration decides. Non-empty input only.
     */
-  private[graft] def plan(bytes: Array[Byte]): Plan = {
+  private def plan(bytes: Array[Byte]): Plan = {
     // 1. BOM
     if (bytes.length >= 3 && (bytes(0) & 0xff) == 0xef &&
       (bytes(1) & 0xff) == 0xbb && (bytes(2) & 0xff) == 0xbf) return Utf8Bom
@@ -222,18 +193,11 @@ object Decode {
     }
   }
 
-  /** Decode under a final plan (not [[Undeclared]], whose validity the
-    * caller has settled).
-    */
-  private[graft] def decode(bytes: Array[Byte], p: Plan): Decoded =
-    Decoded(decodeWith(bytes, p.offset, p.cs), p.label)
-
-  /** Charset-decision prefix of [[apply]] exposed for the byte-level fast
-    * path (ByteTokenizer): when the fixed detection order lands on UTF-8,
-    * returns the content offset (BOM skip) and the label [[apply]] WOULD
-    * produce for valid input — the caller still owes a validity check and
-    * must fall back to [[apply]] when validation fails (REPLACE semantics)
-    * or when another charset is chosen (returned null).
+  /** The detection order's UTF-8 decision, for code that rebuilds the
+    * route of [[utf8]] step by step (the perfbench trace, StageFloor): when
+    * it lands on UTF-8, the content offset (BOM skip) and the label for
+    * valid input; null for another charset or empty input. The caller
+    * still owes the validity check.
     */
   final class Utf8Plan(val offset: Int, val label: String)
 
@@ -247,10 +211,63 @@ object Decode {
   def apply(bytes: Array[Byte]): Decoded = {
     if (bytes == null || bytes.isEmpty) return Decoded("", "empty")
     val p = plan(bytes)
-    if (p ne Undeclared) decode(bytes, p)
     // 3. UTF-8 validation, 4. fallback
-    else if (isValidUtf8(bytes)) Decoded(new String(bytes, StandardCharsets.UTF_8), "utf-8")
-    else decode(bytes, Fallback)
+    val q = if ((p ne Undeclared) || ByteTokenizer.prescan(bytes, 0).valid) p else Fallback
+    Decoded(decodeWith(bytes, q.offset, q.cs), q.label)
+  }
+
+  /** A page as UTF-8: valid UTF-8 in `bytes[off, end)` (possibly the
+    * thread's transcode buffer, valid until its next [[utf8]] call), the
+    * charset label, and the prescan of the whole page — the length and
+    * garbage count of [[apply]]'s text. `whole` is false only past the
+    * transcode sizing limit, where the bytes hold a prefix of the page.
+    */
+  final class Utf8View private[Decode] (val bytes: Array[Byte], val off: Int,
+      val end: Int, val label: String, val prescan: ByteTokenizer.Prescan, whole: Boolean) {
+    /** The page's blocks; truncated when the bytes are a prefix. */
+    def tokenize(caps: HtmlTokenizer.Caps = HtmlTokenizer.DefaultCaps): HtmlTokenizer.Result = {
+      val r = ByteTokenizer.tokenize(bytes, off, end, caps)
+      if (whole || r.truncated) r else r.copy(truncated = true)
+    }
+  }
+
+  private def view(u8: Array[Byte], len: Int, label: String): Utf8View =
+    new Utf8View(u8, 0, len, label, ByteTokenizer.prescan(u8, 0, len), true)
+  private val EmptyView = view(Array.emptyByteArray, 0, "empty")
+
+  /** The engine's charset route, decided once (one meta sniff per doc): a
+    * page on UTF-8 whose bytes validate is read in place, windows-1252 is
+    * transcoded from the bytes, and a UTF-16 BOM or declared UTF-8 repaired
+    * with REPLACE is decoded and re-encoded. Never throws.
+    */
+  def utf8(bytes: Array[Byte]): Utf8View = {
+    if (bytes == null || bytes.isEmpty) return EmptyView
+    val p = plan(bytes)
+    if (p.isUtf8) {
+      val ps = ByteTokenizer.prescan(bytes, p.offset)
+      if (ps.valid) return new Utf8View(bytes, p.offset, bytes.length, p.label, ps, true)
+    }
+    val q = if (p eq Undeclared) Fallback else p // 4. not UTF-8
+    val u8 = if (q.cs eq Win1252) win1252ToUtf8(bytes) else null
+    if (u8 != null) view(u8.bytes, u8.len, q.label)
+    else encode(decodeWith(bytes, q.offset, q.cs), q.label)
+  }
+
+  /** Decoded text as UTF-8 — lossless: the JDK decoders under REPLACE never
+    * emit a lone surrogate, the one char `getBytes` cannot encode. Past
+    * `limit` units (where 3 bytes a unit could overflow an array) only a
+    * prefix is encoded, backed off to a code-point boundary; the prescan
+    * still counts the whole text.
+    */
+  private[graft] def encode(text: String, label: String, limit: Int = MaxTranscodeUnits): Utf8View = {
+    if (text.length <= limit) {
+      val u8 = text.getBytes(StandardCharsets.UTF_8)
+      return view(u8, u8.length, label)
+    }
+    val k = if (Character.isHighSurrogate(text.charAt(limit - 1))) limit - 1 else limit
+    val u8 = text.substring(0, k).getBytes(StandardCharsets.UTF_8)
+    new Utf8View(u8, 0, u8.length, label,
+      new ByteTokenizer.Prescan(true, text.length, graft.detect.Quality.garbageCount(text)), false)
   }
 
   // ---- windows-1252 → UTF-8: such a page is tokenized on the byte path,
@@ -271,8 +288,8 @@ object Decode {
       bytes
     }
   }
-  // larger inputs could overflow the 3-bytes-per-unit sizing; they stay on
-  // the String path
+  // the longest input whose 3-bytes-per-unit sizing fits an array; longer
+  // ones take the decode + re-encode route, which keeps a prefix
   private final val MaxTranscodeUnits = (Int.MaxValue - 16) / 3
   private val utf8TL: ThreadLocal[Utf8Buf] = ThreadLocal.withInitial(() => new Utf8Buf)
 

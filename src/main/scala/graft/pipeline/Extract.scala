@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.core._
-import graft.html.{ByteTokenizer, Decode, HtmlTokenizer}
+import graft.html.{Decode, HtmlTokenizer}
 import graft.classify.Classifiers
 import graft.clean.Artifacts
 import graft.boundary.Boundary
@@ -15,6 +15,10 @@ import graft.text.Canon
   *   (deskew/structural normalization) → classify (binarization family) →
   *   artifact removal (removeLines/Dots/HolePunch, denoise) → boundary crop
   *   (autoCrop/warpCrop) → assemble + fixpoint canonicalization (thinning).
+  *
+  * Every page takes one route: one charset decision onto UTF-8 bytes
+  * (`Decode.utf8`), then one tokenizer (`ByteTokenizer`), over-cap pages
+  * included.
   *
   * Stateless per document (the reference's one-Mat-in-one-Mat-out contract),
   * which is exactly what makes it embarrassingly parallel on Spark.
@@ -60,93 +64,26 @@ object Extract {
     // 1. decode (never throws; empty → quarantine, SURVEY.md §2.1 guards)
     if (htmlBytes.isEmpty)
       return quarantine(row.url, Status.EmptyHtml, htmlBytes.length, 0, "empty", 0.0)
-    // 1a. Every decodable page under the char cap is tokenized on the byte
-    // path (VERDICT r4 item 1): the garbage gate and the tokenizer run over
-    // UTF-8 bytes, with no decoded String. A page whose charset detection
-    // lands on UTF-8 and whose bytes validate is read in place; any other
-    // page (windows-1252, a UTF-16 BOM, declared UTF-8 repaired with
-    // REPLACE) is transcoded to UTF-8 once. The charset is decided once
-    // (one meta sniff per doc), and ByteTokenizer emits UTF-16 offsets into
-    // the decoded text either way, so spans are those of the decoded path.
-    // Semantics are IDENTICAL to applyDecoded — ByteTokenizerSpec and
-    // ByteFuzzSpec hold the differential equivalence.
-    val plan = Decode.plan(htmlBytes)
-    var p = plan
-    if (plan.isUtf8) {
-      val ps = ByteTokenizer.prescan(htmlBytes, plan.offset)
-      if (ps.valid) {
-        if (ps.utf16Len <= cfg.caps.maxChars)
-          return onBytes(row, cfg, htmlBytes, plan.offset, htmlBytes.length, ps,
-            plan.label, htmlBytes.length)
-        return onText(row, cfg, Decode.decode(htmlBytes, plan), htmlBytes.length)
-      }
-      if (plan eq Decode.Undeclared) p = Decode.Fallback // 4. not UTF-8
-    }
-    // 1b. transcode: windows-1252 straight from the bytes (one UTF-16 unit
-    // per byte, so the cap reads off the byte length), anything else from
-    // its decoded text. The String path stays only for over-cap pages.
-    if (p.cs eq Decode.Win1252) {
-      val u8 =
-        if (htmlBytes.length <= cfg.caps.maxChars) Decode.win1252ToUtf8(htmlBytes) else null
-      if (u8 != null)
-        return onBytes(row, cfg, u8.bytes, 0, u8.len,
-          ByteTokenizer.prescan(u8.bytes, 0, u8.len), p.label, htmlBytes.length)
-      return onText(row, cfg, Decode.decode(htmlBytes, p), htmlBytes.length)
-    }
-    val dec = Decode.decode(htmlBytes, p)
-    if (dec.text.length > cfg.caps.maxChars) return onText(row, cfg, dec, htmlBytes.length)
-    // lossless: the JDK decoders under REPLACE never emit a lone surrogate
-    // (the one char getBytes could not encode)
-    val u8 = dec.text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    onBytes(row, cfg, u8, 0, u8.length, ByteTokenizer.prescan(u8, 0), p.label,
-      htmlBytes.length)
-  }
-
-  /** Gates + byte tokenizer over valid UTF-8 `bytes[off, end)`. */
-  private def onBytes(row: PageRow, cfg: Config, bytes: Array[Byte], off: Int,
-      end: Int, ps: ByteTokenizer.Prescan, label: String,
-      htmlByteLen: Int): ExtractedDoc = {
+    // 1a. one charset route (Decode.utf8): the page as UTF-8 bytes, read in
+    // place or transcoded once, with a prescan of the whole page — the
+    // garbage gate and the decoded length need no decoded String, and the
+    // tokenizer's UTF-16 offsets are those of the decoded text
+    val page = Decode.utf8(htmlBytes)
+    val ps = page.prescan
     val garbage = if (ps.utf16Len == 0) 0.0 else ps.garbage.toDouble / ps.utf16Len
     if (garbage > cfg.maxGarbageRatio)
-      return quarantine(row.url, Status.Garbage, htmlByteLen, ps.utf16Len, label, garbage)
-    val tok = ByteTokenizer.tokenize(bytes, off, end, cfg.caps)
+      return quarantine(row.url, Status.Garbage, htmlBytes.length, ps.utf16Len, page.label, garbage)
+    // 2. tokenize (the char cap cuts inside the tokenizer)
+    val tok = page.tokenize(cfg.caps)
     if (tok.blocks.isEmpty)
-      return quarantine(row.url, Status.NoBlocks, htmlByteLen, ps.utf16Len, label, garbage)
-    finish(row, cfg, tok, htmlByteLen, ps.utf16Len, label, garbage)
-  }
-
-  /** The decoded-String path (the only path before r5): the reference
-    * semantics the byte path is differentially tested against
-    * (ByteTokenizerSpec asserts apply == applyDecoded on every corpus).
-    * [[apply]] itself takes it only for over-cap pages.
-    */
-  private[graft] def applyDecoded(row: PageRow, cfg: Config = Default): ExtractedDoc = {
-    val htmlBytes = if (row.html == null) Array.emptyByteArray else row.html
-    if (htmlBytes.isEmpty)
-      return quarantine(row.url, Status.EmptyHtml, htmlBytes.length, 0, "empty", 0.0)
-    onText(row, cfg, Decode(htmlBytes), htmlBytes.length)
-  }
-
-  /** Gates + String tokenizer over the decoded text. */
-  private def onText(row: PageRow, cfg: Config, dec: Decode.Decoded,
-      htmlByteLen: Int): ExtractedDoc = {
-    val garbage = Quality.garbageRatio(dec.text)
-    if (garbage > cfg.maxGarbageRatio)
-      return quarantine(row.url, Status.Garbage, htmlByteLen, dec.text.length,
-        dec.charset, garbage)
-    // 2. tokenize
-    val tok = HtmlTokenizer(dec.text, cfg.caps)
-    if (tok.blocks.isEmpty)
-      return quarantine(row.url, Status.NoBlocks, htmlByteLen, dec.text.length,
-        dec.charset, garbage)
-    finish(row, cfg, tok, htmlByteLen, dec.text.length, dec.charset, garbage)
+      return quarantine(row.url, Status.NoBlocks, htmlBytes.length, ps.utf16Len, page.label, garbage)
+    finish(row, cfg, tok, htmlBytes.length, ps.utf16Len, page.label, garbage)
   }
 
   /** Steps 2a–6 (rotate → deskew → classify → artifacts → boundary →
-    * assemble) — shared verbatim by the byte and decoded paths; everything
-    * past tokenization sees only the Block array.
+    * assemble); everything past tokenization sees only the Block array.
     */
-  private def finish(row: PageRow, cfg: Config, tok: HtmlTokenizer.Result,
+  private[graft] def finish(row: PageRow, cfg: Config, tok: HtmlTokenizer.Result,
       htmlByteLen: Int, decodedChars: Int, charset: String,
       garbage: Double): ExtractedDoc = {
     // 2a. rotate (opt-in, caller-given geometry): linearize column-flow

@@ -85,8 +85,7 @@ object PipelineQueries {
     val pages = PageSource.pages(spark, 100L)
     import pages.sparkSession.implicits._
     pages.map { p =>
-      val dec = graft.html.Decode(p.html)
-      val toks = graft.html.HtmlTokenizer(dec.text)
+      val toks = graft.html.Decode.utf8(p.html).tokenize()
       val sig = Classifiers.signal(toks.blocks)
       (p.url, toks.blocks.length,
         if (sig.isEmpty) 0L else sig.max.toLong,
@@ -135,8 +134,7 @@ object PipelineQueries {
     val pages = PageSource.pages(spark, N)
     import pages.sparkSession.implicits._
     pages.map { p =>
-      val dec = graft.html.Decode(p.html)
-      val toks = graft.html.HtmlTokenizer(dec.text)
+      val toks = graft.html.Decode.utf8(p.html).tokenize()
       val d = graft.detect.Orientation.detect(toks.blocks)
       (p.url, d.docType,
         math.round(d.textConf * 10000), math.round(d.linkConf * 10000))
@@ -231,8 +229,7 @@ object PipelineQueries {
     val pages = PageSource.pages(spark, 200L)
     import pages.sparkSession.implicits._
     pages.map { p =>
-      val dec = graft.html.Decode(p.html)
-      val toks = graft.html.HtmlTokenizer(dec.text)
+      val toks = graft.html.Decode.utf8(p.html).tokenize()
       val labels = Classifiers.classify(toks.blocks)
       graft.boundary.Boundary.find(toks.blocks, labels) match {
         case Some(r) => (p.url, r.lo, r.hi, true)

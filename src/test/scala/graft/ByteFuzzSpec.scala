@@ -5,19 +5,20 @@ import graft.html.{ByteTokenizer, Decode, HtmlTokenizer}
 import graft.pipeline.Extract
 import scala.util.Random
 
-/** Raw BYTE-level differential fuzzing of the r5 fast path — the structured
-  * adversarial suite (ByteTokenizerSpec) composes well-formed fragments; this
-  * one emits byte soup with no grammar at all, so tag/entity/UTF-8 seams land
-  * at arbitrary positions (mid-word-lane, mid-entity, mid-sequence) that a
-  * fragment composer cannot reach:
+/** Raw BYTE-level differential fuzzing of the engine's route — the
+  * structured adversarial suite (ByteTokenizerSpec) composes well-formed
+  * fragments; this one emits byte soup with no grammar at all, so
+  * tag/entity/UTF-8 seams land at arbitrary positions (mid-word-lane,
+  * mid-entity, mid-sequence) that a fragment composer cannot reach
+  * (graft.Differential):
   *
-  *   - tokenizer level: `ByteTokenizer` must equal
-  *     `HtmlTokenizer(Decode(bytes).text)` block-for-block (truncated flag
-  *     included), over the bytes in place when they are on the UTF-8 plan
-  *     and over the decoded text re-encoded as UTF-8 otherwise (the
-  *     pipeline's transcoded path);
-  *   - pipeline level: for EVERY doc — valid or invalid UTF-8, eligible or
-  *     fallback — `Extract.apply == Extract.applyDecoded` and neither throws.
+  *   - tokenizer level: `Decode.utf8` onto `ByteTokenizer` must equal
+  *     `StringTokenizer(Decode(bytes).text)` block-for-block (truncated flag
+  *     included), over the bytes in place when they are valid UTF-8 and
+  *     over the transcoded view otherwise — at the default caps and under
+  *     one small char cap per document, whose cut lands anywhere;
+  *   - pipeline level: for EVERY doc — valid or invalid UTF-8, in place or
+  *     transcoded — `Extract.apply == ExtractDecoded` and neither throws.
   *
   * The generator intentionally produces invalid UTF-8 some of the time; those
   * docs exercise the prescan-reject → transcode seam, which is as much a
@@ -26,30 +27,12 @@ import scala.util.Random
   * Latin flush and the raw/NFC flush.
   */
 class ByteFuzzSpec extends AnyFunSuite {
+  import Differential.{assertBlocksEqual, assertExtractEqual, row}
 
-  private def assertBlocksEqual(url: String, bytes: Array[Byte]): Unit = {
-    val dec = Decode(bytes)
-    if (dec.text.length > HtmlTokenizer.DefaultCaps.maxChars) return // String path
-    val plan = Decode.utf8Plan(bytes)
-    val inPlace = plan != null && ByteTokenizer.prescan(bytes, plan.offset).valid
-    val (u8, off) =
-      if (inPlace) (bytes, plan.offset)
-      else (dec.text.getBytes(java.nio.charset.StandardCharsets.UTF_8), 0)
-    val ps = ByteTokenizer.prescan(u8, off)
-    assert(ps.valid, s"$url: prescan valid")
-    assert(ps.utf16Len == dec.text.length, s"$url: utf16Len")
-    val bt = ByteTokenizer(u8, off)
-    val ct = HtmlTokenizer(dec.text)
-    assert(bt.truncated == ct.truncated, s"$url: truncated")
-    assert(bt.blocks.length == ct.blocks.length,
-      s"$url: block count ${bt.blocks.length} vs ${ct.blocks.length}")
-    var i = 0
-    while (i < ct.blocks.length) {
-      assert(bt.blocks(i) == ct.blocks(i),
-        s"$url block $i:\n byte: ${bt.blocks(i)}\n char: ${ct.blocks(i)}")
-      i += 1
-    }
-  }
+  /** The small char cap of soup document `k` (varied without drawing from
+    * the generator's random stream).
+    */
+  private def smallCap(k: Int): HtmlTokenizer.Caps = HtmlTokenizer.Caps(maxChars = 16 + (k * 37) % 256)
 
   // (indexing an inline Array(...) literal would feed the index to
   // Array.apply's implicit ClassTag list — hence the helper)
@@ -151,6 +134,7 @@ class ByteFuzzSpec extends AnyFunSuite {
       val plan = Decode.utf8Plan(bytes)
       if (plan != null && ByteTokenizer.prescan(bytes, plan.offset).valid) compared += 1
       assertBlocksEqual(s"soup-$k", bytes)
+      assertBlocksEqual(s"soup-$k-cap", bytes, smallCap(k))
       k += 1
     }
     // the generator must actually exercise the byte path, not vacuously skip
@@ -159,15 +143,11 @@ class ByteFuzzSpec extends AnyFunSuite {
 
   test("Extract equivalence + never-throw on 600 byte-soup documents (invalid UTF-8 included)") {
     val rng = new Random(0xf00dfeedL)
-    def check(url: String, bytes: Array[Byte]): Unit = {
+    def check(url: String, bytes: Array[Byte], caps: HtmlTokenizer.Caps): Unit = {
       assertBlocksEqual(url, bytes)
-      val row = graft.core.PageRow(url, new java.sql.Timestamp(0L), bytes, "", "en")
-      val a = Extract(row)
-      val b = Extract.applyDecoded(row)
-      assert(a.status == b.status, s"$url: status ${a.status} vs ${b.status}")
-      assert(a.extracted_text == b.extracted_text, s"$url: text")
-      assert(a.spans.toSeq == b.spans.toSeq, s"$url: spans")
-      assert(a.stats == b.stats, s"$url: stats\n ${a.stats}\n ${b.stats}")
+      assertExtractEqual(row(url, bytes))
+      assertBlocksEqual(s"$url-cap", bytes, caps)
+      assertExtractEqual(row(s"$url-cap", bytes), Extract.Config(caps = caps))
     }
     var k = 0
     var fellBack = 0
@@ -176,7 +156,7 @@ class ByteFuzzSpec extends AnyFunSuite {
       val bytes = soup(rng, allowInvalid = true)
       val plan = Decode.utf8Plan(bytes)
       if (plan == null || !ByteTokenizer.prescan(bytes, plan.offset).valid) fellBack += 1
-      check(s"soup-x-$k", bytes)
+      check(s"soup-x-$k", bytes, smallCap(k))
       // every tenth soup once more, as UTF-16 behind a BOM (an extra input:
       // the raw soup above is checked either way)
       if (k % 10 == 9) {
@@ -186,7 +166,7 @@ class ByteFuzzSpec extends AnyFunSuite {
           text.getBytes(if (le) java.nio.charset.StandardCharsets.UTF_16LE
             else java.nio.charset.StandardCharsets.UTF_16BE)
         assert(Decode.utf8Plan(u16) == null, s"soup-x-$k-utf16: plan")
-        check(s"soup-x-$k-utf16", u16)
+        check(s"soup-x-$k-utf16", u16, smallCap(k))
         utf16 += 1
       }
       k += 1

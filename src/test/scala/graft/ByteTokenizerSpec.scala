@@ -2,78 +2,33 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.fixtures.FixtureGen
+import graft.core.Status
 import graft.html.{ByteTokenizer, Decode, HtmlTokenizer}
-import graft.pipeline.Extract
+import graft.pipeline.{Extract, ExtractDecoded}
 import java.nio.charset.StandardCharsets
 import scala.util.Random
 
-/** Differential equivalence of the r5 byte-level fast path against the
-  * decoded-String reference semantics:
+/** Differential equivalence of the engine's one route — `Decode.utf8`
+  * onto `ByteTokenizer` — against the decoded-String reference semantics
+  * (graft.Differential):
   *
-  *   1. tokenizer level — `ByteTokenizer(bytes) == HtmlTokenizer(Decode(bytes)
+  *   1. tokenizer level — the byte path == `StringTokenizer(Decode(bytes)
   *      .text)` block-for-block on every fixture corpus and on randomized
   *      adversarial documents (entities, non-ASCII, malformed markup,
-  *      raw-text traps, astral chars); a page off the UTF-8 plan (cp1252,
-  *      UTF-16 BOM, declared UTF-8 repaired with REPLACE) is compared as the
-  *      pipeline tokenizes it — its decoded text re-encoded as UTF-8;
-  *   2. prescan level — utf16 length and garbage count match the decoded
-  *      string's `length` / `Quality.garbageRatio` numerator;
-  *   3. pipeline level — `Extract.apply == Extract.applyDecoded` on every
-  *      corpus (status, text, spans, stats including charset label).
+  *      raw-text traps, astral chars), in every charset the route handles
+  *      (UTF-8 in place; cp1252, UTF-16 BOM and REPLACE-repaired UTF-8
+  *      transcoded) and at every char-cap cut;
+  *   2. charset/prescan level — the UTF-8 view decodes to the decoded
+  *      string under the same label, and its utf16 length and garbage count
+  *      match the string's `length` / `Quality.garbageRatio` numerator;
+  *   3. pipeline level — `Extract.apply == ExtractDecoded` on every corpus
+  *      (status, text, spans, stats including charset label).
   *
   * Any future tokenizer change must keep this suite green — it is the
-  * structural guard that the two implementations cannot drift.
+  * structural guard that the engine cannot drift from the reference.
   */
 class ByteTokenizerSpec extends AnyFunSuite {
-
-  private def assertBlocksEqual(url: String, bytes: Array[Byte]): Unit = {
-    val dec = Decode(bytes)
-    if (dec.text.length > HtmlTokenizer.DefaultCaps.maxChars) return // String path
-    val plan = Decode.utf8Plan(bytes)
-    val inPlace = plan != null && ByteTokenizer.prescan(bytes, plan.offset).valid
-    // off the UTF-8 plan, the byte path reads the decoded text as UTF-8
-    val (u8, off) =
-      if (inPlace) (bytes, plan.offset)
-      else (dec.text.getBytes(StandardCharsets.UTF_8), 0)
-    val ps = ByteTokenizer.prescan(u8, off)
-    assert(ps.valid, s"$url: prescan valid")
-    // prescan equivalence
-    assert(ps.utf16Len == dec.text.length, s"$url: utf16Len")
-    val expBad = {
-      var bad = 0
-      var i = 0
-      while (i < dec.text.length) {
-        val c = dec.text.charAt(i)
-        if (c == '\ufffd' || graft.text.Canon.isControl(c)) bad += 1
-        i += 1
-      }
-      bad
-    }
-    assert(ps.garbage == expBad, s"$url: garbage count")
-    // tokenizer equivalence
-    val bt = ByteTokenizer(u8, off)
-    val ct = HtmlTokenizer(dec.text)
-    assert(bt.truncated == ct.truncated, s"$url: truncated")
-    assert(bt.blocks.length == ct.blocks.length,
-      s"$url: block count ${bt.blocks.length} vs ${ct.blocks.length}")
-    var i = 0
-    while (i < ct.blocks.length) {
-      assert(bt.blocks(i) == ct.blocks(i),
-        s"$url block $i:\n byte: ${bt.blocks(i)}\n char: ${ct.blocks(i)}")
-      i += 1
-    }
-  }
-
-  private def assertExtractEqual(f: FixtureGen.Fixture): Unit = assertExtractEqual(f.page)
-
-  private def assertExtractEqual(page: graft.core.PageRow): Unit = {
-    val a = Extract(page)
-    val b = Extract.applyDecoded(page)
-    assert(a.status == b.status, s"${page.url}: status")
-    assert(a.extracted_text == b.extracted_text, s"${page.url}: text")
-    assert(a.spans.toSeq == b.spans.toSeq, s"${page.url}: spans")
-    assert(a.stats == b.stats, s"${page.url}: stats\n ${a.stats}\n ${b.stats}")
-  }
+  import Differential.{assertBlocksEqual, assertExtractEqual, row}
 
   test("tokenizer + prescan equivalence across all fixture corpora") {
     val all =
@@ -89,7 +44,7 @@ class ByteTokenizerSpec extends AnyFunSuite {
       FixtureGen.fixtures(500) ++ FixtureGen.adversarial(150) ++
         FixtureGen.colflow(60) ++
         FixtureGen.ruleCorpora.flatMap { case (_, gen, _) => gen(40) }
-    all.foreach(assertExtractEqual)
+    all.foreach(f => assertExtractEqual(f.page))
   }
 
   /** Random adversarial documents aimed at the byte/char seams: multi-byte
@@ -185,8 +140,7 @@ class ByteTokenizerSpec extends AnyFunSuite {
       variants.zipWithIndex.foreach { case (b, v) =>
         labels += Decode(b).charset
         assertBlocksEqual(s"transcoded-$k-$v", b)
-        assertExtractEqual(graft.core.PageRow(s"transcoded-$k-$v",
-          new java.sql.Timestamp(0L), b, "", "en"))
+        assertExtractEqual(row(s"transcoded-$k-$v", b))
       }
       k += 1
     }
@@ -194,22 +148,59 @@ class ByteTokenizerSpec extends AnyFunSuite {
       "utf-8-bom", "utf-16le-bom", "utf-16be-bom").subsetOf(labels), labels)
   }
 
-  test("over-cap pages take the String path (truncated) in every encoding") {
-    val cfg = Extract.Config(caps = HtmlTokenizer.Caps(maxChars = 120))
-    val doc = "<html><body><p>caf\u00e9 cr\u00e8me " + ("word " * 60) +
-      "</p><p>tail</p></body></html>"
+  test("over-cap sweep: every char-cap cut, four encodings, byte path == reference") {
+    // each page is cut at every maxChars from 0 past its end: through tags,
+    // comments, entities, raw-text end tags and 2-, 3- and 4-byte chars
+    // (a cut inside a surrogate pair leaves the pair out whole)
+    val pages = Seq(
+      "<html><body><p>caf\u00e9 cr\u00e8me " + ("word " * 60) +
+        "</p><p>tail</p></body></html>",
+      "<html><head><title>t\u00edtulo</title></head><body><p>a &amp; b &#x1F600; " +
+        "&eacute;\u00a0x</p><!-- c\u00f6mment <p>no</p> --><script>s = \"</scr\" + " +
+        "\"ipt>\";</script><p>\u4e16\u754c \ud83d\ude00\ud83c\udf55</p><p>cafe\u0301 \u00f1</p>" +
+        "<ul><li><a href='/x'>l\u00ednk \u2014 \ud83d\ude00</a> after</li></ul>" +
+        "<style>p{}</style><textarea>r&amp;w</textarea><p>&lt;end&gt; &#233</p></body></html>")
     val cp1252 = java.nio.charset.Charset.forName("windows-1252")
-    Seq(doc.getBytes(StandardCharsets.UTF_8), doc.getBytes(cp1252),
-      ("<meta charset=\"utf-8\">" + doc).getBytes(cp1252),
-      Array(0xff, 0xfe).map(_.toByte) ++ doc.getBytes(StandardCharsets.UTF_16LE))
-      .zipWithIndex.foreach { case (b, v) =>
-        val row = graft.core.PageRow(s"cap-$v", new java.sql.Timestamp(0L), b, "", "en")
-        val a = Extract(row, cfg)
-        val d = Extract.applyDecoded(row, cfg)
-        assert(a.stats.truncated, s"cap-$v")
-        assert(a.status == d.status && a.extracted_text == d.extracted_text &&
-          a.spans.toSeq == d.spans.toSeq && a.stats == d.stats, s"cap-$v")
-      }
+    var okTruncated = 0
+    pages.zipWithIndex.foreach { case (doc, d) =>
+      Seq(doc.getBytes(StandardCharsets.UTF_8), // in place
+        doc.getBytes(cp1252), // windows-1252 fallback
+        ("<meta charset=\"utf-8\">" + doc).getBytes(cp1252), // REPLACE
+        Array(0xff, 0xfe).map(_.toByte) ++ doc.getBytes(StandardCharsets.UTF_16LE))
+        .zipWithIndex.foreach { case (b, v) =>
+          val len = Decode(b).text.length
+          (0 to len + 1).foreach { cap =>
+            val url = s"cap-$d-$v-$cap"
+            val caps = HtmlTokenizer.Caps(maxChars = cap)
+            val tok = assertBlocksEqual(url, b, caps)
+            assert(tok.truncated == (cap < len), url)
+            val a = assertExtractEqual(row(url, b), Extract.Config(caps = caps))
+            if (a.status == Status.Ok) {
+              assert(a.stats.truncated == (cap < len), url)
+              if (cap < len) okTruncated += 1
+            }
+          }
+        }
+    }
+    assert(okTruncated > 1000, s"only $okTruncated truncated pages extracted")
+  }
+
+  test("re-encode past the sizing limit keeps a prefix and reports the whole page") {
+    // the route a page takes when 3 bytes a unit would overflow an array,
+    // with the limit lowered to a few units: the bytes keep a code-point
+    // prefix, the prescan counts the whole text, and tokenizing it is
+    // truncated even under a cap it does not reach
+    val text = "<p>a\ud83d\ude00b\u0007c\ufffd</p><p>tail</p>"
+    val cut = Decode.encode(text, "utf-16le-bom", limit = 5)
+    assert(new String(cut.bytes, cut.off, cut.end - cut.off, StandardCharsets.UTF_8) == "<p>a")
+    assert(cut.label == "utf-16le-bom")
+    assert(cut.prescan.utf16Len == text.length && cut.prescan.garbage == 2)
+    val r = cut.tokenize()
+    assert(r.truncated && r.blocks.map(_.text).toSeq == Seq("a"))
+    val whole = Decode.encode(text, "utf-16le-bom", limit = text.length)
+    assert(whole.prescan.utf16Len == text.length && whole.prescan.garbage == 2)
+    val w = whole.tokenize()
+    assert(!w.truncated && w.blocks.map(_.text).toSeq == Seq("a\ud83d\ude00bc\ufffd", "tail"))
   }
 
   test("windows-1252 transcodes straight to the JDK decoder's chars, all 256 bytes") {
@@ -255,7 +246,7 @@ class ByteTokenizerSpec extends AnyFunSuite {
         }, s"lone-$v: $t")
         assert(t.contains("\ufffd") && t.contains("\ud83d\ude00"), s"lone-$v: $t")
         assertBlocksEqual(s"lone-$v", b)
-        assertExtractEqual(graft.core.PageRow(s"lone-$v", new java.sql.Timestamp(0L), b, "", "en"))
+        assertExtractEqual(row(s"lone-$v", b))
       }
   }
 
@@ -321,7 +312,8 @@ class ByteTokenizerSpec extends AnyFunSuite {
     val bad = Array[Byte]('a', 0xc3.toByte, 'x') // truncated 2-byte seq
     assert(!ByteTokenizer.prescan(bad, 0).valid)
     // cp1252 bytes under a utf-8 meta label: plan fires, prescan rejects,
-    // Extract must fall back to REPLACE semantics identical to applyDecoded
+    // Extract must fall back to REPLACE semantics identical to the
+    // decoded-String reference
     val html = "<html><head><meta charset=\"utf-8\"></head><body><p>" +
       "caf\u00e9 and more content here to pass the garbage gate, plus " +
       "enough words that the block is a real paragraph of text." +
@@ -329,9 +321,8 @@ class ByteTokenizerSpec extends AnyFunSuite {
     val cp = html.getBytes(java.nio.charset.Charset.forName("windows-1252"))
     assert(Decode.utf8Plan(cp) != null)
     assert(!ByteTokenizer.prescan(cp, 0).valid)
-    val row = graft.core.PageRow("u", new java.sql.Timestamp(0L), cp, "", "en")
-    val a = Extract(row)
-    val b = Extract.applyDecoded(row)
+    val a = Extract(row("u", cp))
+    val b = ExtractDecoded(row("u", cp))
     assert(a.extracted_text == b.extracted_text && a.stats == b.stats)
     assert(a.extracted_text.contains("caf\ufffd"))
   }

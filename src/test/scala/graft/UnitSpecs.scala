@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.charset.StandardCharsets
-import graft.html.{Decode, Entities, HtmlTokenizer}
+import graft.html.{ByteTokenizer, Decode, Entities, HtmlTokenizer}
 import graft.text.Canon
 import graft.classify.{Classifiers, Otsu, Smoothing, WindowStats}
 import graft.clean.Artifacts
@@ -41,9 +41,10 @@ class DecodeSpec extends AnyFunSuite {
   }
   test("empty input") { assert(Decode(Array.emptyByteArray).charset == "empty") }
   test("utf-8 validator rejects overlongs and surrogates") {
-    assert(!Decode.isValidUtf8(Array(0xc0.toByte, 0xaf.toByte))) // overlong /
-    assert(!Decode.isValidUtf8(Array(0xed.toByte, 0xa0.toByte, 0x80.toByte))) // surrogate
-    assert(Decode.isValidUtf8("é€😀".getBytes(StandardCharsets.UTF_8)))
+    def valid(b: Array[Byte]) = ByteTokenizer.prescan(b, 0).valid
+    assert(!valid(Array(0xc0.toByte, 0xaf.toByte))) // overlong /
+    assert(!valid(Array(0xed.toByte, 0xa0.toByte, 0x80.toByte))) // surrogate
+    assert(valid("é€😀".getBytes(StandardCharsets.UTF_8)))
   }
 }
 
@@ -173,9 +174,19 @@ class TokenizerSpec extends AnyFunSuite {
     val r = HtmlTokenizer(html, HtmlTokenizer.Caps(maxBlocks = 10))
     assert(r.blocks.length == 10 && r.truncated)
   }
+  test("caps: the char cap never splits a surrogate pair") {
+    val html = "<p>ab\ud83d\ude00cd</p>"
+    val r = HtmlTokenizer(html, HtmlTokenizer.Caps(maxChars = 6)) // cuts between the pair
+    assert(r.truncated)
+    assert(r.blocks.toSeq.map(b => (b.text, b.startOff, b.endOff)) == Seq(("ab", 3, 5)))
+    assert(HtmlTokenizer(html, HtmlTokenizer.Caps(maxChars = 7)).blocks.map(_.text).toSeq ==
+      Seq("ab\ud83d\ude00"))
+  }
   test("empty and junk inputs never throw") {
     assert(HtmlTokenizer("").blocks.isEmpty)
-    assert(HtmlTokenizer("<<<>>>&&&").blocks.nonEmpty || true)
+    val junk = HtmlTokenizer("<<<>>>&&&")
+    assert(!junk.truncated)
+    assert(junk.blocks.toSeq.map(b => (b.text, b.startOff, b.endOff)) == Seq(("<<<>>>&&&", 0, 9)))
   }
 }
 
