@@ -32,28 +32,27 @@ object Classifiers {
       k: Double = 0.2,
       r: Double = 128.0, // Sauvola dynamic range (binarizeSauvola.cpp:61)
       c: Double = 10.0, // MEAN_C offset (binarizeAT/PureAdaptive families)
-      sigma: Double = 10.0, // gaussian window sigma
-      alpha1: Double = 0.75, // Feng (binarizeFeng.h:48-53)
-      k1: Double = 0.2,
-      k2: Double = 0.03,
-      gamma: Double = 2.0,
       absMin: Double = 64.0, // min non-link chars for content (floor mask)
       maxLinkDensity: Double = 0.66,
       morphIters: Int = 2,
       smoothing: String = "median", // "median" | "openclose"
       maskedStats: Boolean = true, // backgroundNormalization transplant
-      strongLevel: Double = 200.0, // confidence band: see classify()
       // CLAHE pre-stage (EnhanceLocalContrastByCLAHE, imageLibCommon.cpp:
       // 327-395): opt-in tile-wise clipped equalization of the signal so a
       // long document's late dim-but-consistent content is not drowned by
-      // bright content elsewhere. claheClip follows cv::createCLAHE's
-      // default (40.0); see claheEqualize for the transplant notes.
-      clahe: Boolean = false,
-      claheClip: Double = 40.0,
-      claheTile: Int = 32
+      // bright content elsewhere; see claheEqualize for the transplant notes.
+      clahe: Boolean = false
   )
 
   val Default: Config = Config()
+
+  private val Sigma = 10.0 // gaussian window sigma (gaussadaptive, agt)
+  // Feng's exponent (binarizeFeng.h:48-53), also the gamma branch of
+  // variances (binarizeByLocalVariances.cpp:119)
+  private val Gamma = 2.0
+  private val StrongLevel = 200.0 // confidence band: see classify()
+  private val ClaheClip = 40.0 // cv::createCLAHE's default clip limit
+  private val ClaheTile = 32 // blocks per CLAHE tile
 
   /** Reference-faithful per-kind defaults where the reference's own default
     * differs in SIGN or STRUCTURE from the family-wide Config default (the
@@ -155,13 +154,14 @@ object Classifiers {
         val rs = math.max(
           if (cfg.maskedStats) ws.maskedGlobalMaxStd(w) else ws.globalMaxStd(w), 1e-9)
         val mn = ws.globalMin
+        val alpha1 = 0.75; val k1 = 0.2; val k2 = 0.03 // binarizeFeng.h:48-53
         var i = 0
         while (i < n) {
           val m = m_(i, w); val s = s_(i, w)
           val sr = s / rs
-          val a2 = cfg.k1 * math.pow(sr, cfg.gamma)
-          val a3 = cfg.k2 * math.pow(sr, cfg.gamma)
-          t(i) = (1.0 - cfg.alpha1) * m + a2 * sr * (m - mn) + a3 * mn
+          val a2 = k1 * math.pow(sr, Gamma)
+          val a3 = k2 * math.pow(sr, Gamma)
+          t(i) = (1.0 - alpha1) * m + a2 * sr * (m - mn) + a3 * mn
           i += 1
         }
       case "meanadaptive" =>
@@ -172,7 +172,7 @@ object Classifiers {
       case "gaussadaptive" =>
         // GAUSSIAN_C (binarizePureAdaptiveGaussian.cpp:32-75)
         var i = 0
-        while (i < n) { t(i) = ws.gaussMean(i, w, cfg.sigma) - cfg.c; i += 1 }
+        while (i < n) { t(i) = ws.gaussMean(i, w, Sigma) - cfg.c; i += 1 }
       case "agt" =>
         // binarizeAGT (binarizeAGT.cpp:33-60): median-smooth the signal,
         // then GAUSSIAN_C threshold
@@ -181,7 +181,7 @@ object Classifiers {
         while (i < n) { sm(i) = ws.median(i, 5); i += 1 }
         val ws2 = new WindowStats(sm)
         i = 0
-        while (i < n) { t(i) = ws2.gaussMean(i, w, cfg.sigma) - cfg.c; i += 1 }
+        while (i < n) { t(i) = ws2.gaussMean(i, w, Sigma) - cfg.c; i += 1 }
       case "variances" =>
         // binarizeByLocalVariances (binarizeByLocalVariances.cpp:13-141):
         // ensemble of masks ANDed — mask1: local variance > minVar (:53-57);
@@ -228,7 +228,7 @@ object Classifiers {
         i = 0
         while (i < n) {
           val u = if (mxL - mnL < 1e-12) 0.0 else (lg(i) - mnL) / (mxL - mnL)
-          gma(i) = math.min(255.0, math.round(math.pow(u, cfg.gamma) * 255.0).toDouble)
+          gma(i) = math.min(255.0, math.round(math.pow(u, Gamma) * 255.0).toDouble)
           i += 1
         }
         val wsG = new WindowStats(gma)
@@ -403,16 +403,6 @@ object Classifiers {
     t
   }
 
-  /** Full classification: threshold mask AND link mask, then CONFIDENCE-
-    * BANDED label smoothing. Smoothing may only override the decision of
-    * AMBIGUOUS blocks (absMin < x < strongLevel, link-admissible) — blocks
-    * with saturated signal are content with certainty and are never smoothed
-    * away; blocks below the floor or over the link limit are boilerplate
-    * with certainty and are never smoothed in. The banding is the ensemble-
-    * of-absolute-masks idea of binarizeByLocalVariances
-    * (binarizeByLocalVariances.cpp:53-57 `var > 10` absolute mask ANDed with
-    * relative masks :136-139) applied to the post-pass.
-    */
   /** 1-D CLAHE over the block-signal axis (EnhanceLocalContrastByCLAHE_1,
     * imageLibCommon.cpp:327-345: createCLAHE + setClipLimit + apply) — the
     * tile grid becomes chunks of `tile` consecutive blocks, the clip limit
@@ -434,7 +424,7 @@ object Classifiers {
     * identity ramp rather than toward a flattening — the contract CLAHE's
     * clip exists for (limit contrast amplification).
     */
-  def claheEqualize(x: Array[Double], tile: Int = 32, clip: Double = 40.0): Array[Double] = {
+  def claheEqualize(x: Array[Double], tile: Int = ClaheTile, clip: Double = ClaheClip): Array[Double] = {
     val n = x.length
     if (n == 0) return x
     val T = math.max(4, tile)
@@ -495,11 +485,21 @@ object Classifiers {
     out
   }
 
+  /** Full classification: threshold mask AND link mask, then CONFIDENCE-
+    * BANDED label smoothing. Smoothing may only override the decision of
+    * AMBIGUOUS blocks (absMin < x < StrongLevel, link-admissible) — blocks
+    * with saturated signal are content with certainty and are never smoothed
+    * away; blocks below the floor or over the link limit are boilerplate
+    * with certainty and are never smoothed in. The banding is the ensemble-
+    * of-absolute-masks idea of binarizeByLocalVariances
+    * (binarizeByLocalVariances.cpp:53-57 `var > 10` absolute mask ANDed with
+    * relative masks :136-139) applied to the post-pass.
+    */
   def classify(blocks: Array[Block], cfg: Config = Default): Array[Boolean] = {
     val n = blocks.length
     if (n == 0) return Array.empty
     val x0 = signal(blocks)
-    val x = if (cfg.clahe) claheEqualize(x0, cfg.claheTile, cfg.claheClip) else x0
+    val x = if (cfg.clahe) claheEqualize(x0, ClaheTile, ClaheClip) else x0
     val paths =
       if (cfg.kind == "fbcitb") blocks.map(_.tagPath) else null
     val t = thresholds(x, cfg, paths)
@@ -547,7 +547,7 @@ object Classifiers {
     val out = new Array[Boolean](n)
     i = 0
     while (i < n) {
-      val ambiguous = x(i) > cfg.absMin && x(i) < cfg.strongLevel &&
+      val ambiguous = x(i) > cfg.absMin && x(i) < StrongLevel &&
         linkDensity(blocks(i)) <= cfg.maxLinkDensity
       out(i) = if (ambiguous) smoothed(i) else keep(i)
       i += 1

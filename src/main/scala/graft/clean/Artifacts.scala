@@ -113,14 +113,6 @@ object Artifacts {
     out
   }
 
-  /** denoiseSaltPepper analogue (denoiseSaltPepper.cpp:29-36): iterated
-    * median-of-3 filter on the label sequence (the label-domain counterpart
-    * of medianBlur). Offered as an alternative smoother; [[graft.classify.Smoothing]]
-    * is the default post-pass.
-    */
-  def medianLabelSmooth(labels: Array[Boolean], times: Int): Array[Boolean] =
-    graft.classify.Smoothing.median(labels, times)
-
   /** basicDeblur analogue (basicDeblur.cpp:33-70, unsharp mask
     * `addWeighted(orig, 2w, blurred, 2w-2)`): sharpen the signal before
     * thresholding, x' = x + lambda*(x - windowMean(x)). Improves separation

@@ -435,7 +435,7 @@ object FixtureGen {
 
   /** "band": article with saturated paragraphs plus ISOLATED mid-band
     * paragraphs (125–190 non-link chars — above the absMin floor, below the
-    * strongLevel confidence band) and an ambiguous nav teaser (85–115
+    * StrongLevel confidence band) and an ambiguous nav teaser (85–115
     * chars). The naive window threshold drops the mid-band paragraphs and
     * is indifferent on the teaser; banded smoothing rescues the former
     * (strong kept neighbors) and kills the latter (dropped nav neighbors).
@@ -770,7 +770,7 @@ object FixtureGen {
   //    probes DROPPED (margin 8.2), articles kept (margin 1.8) — the +k*s
   //    term above the mean is the decider. Rivals: meanadaptive t = m - 10 =
   //    242.27 KEEPS the probes (margin 2.7); sauvola t = 203.6 keeps them
-  //    (margin 41). Probe 245 > strongLevel → raw (unsmoothed) labels.
+  //    (margin 41). Probe 245 > StrongLevel → raw (unsmoothed) labels.
   //  - "wolfglob" (binarizeWolfJolion.cpp:114-130): 8x255 + 3x248 probes.
   //    With one shared window, s == sMax exactly, so wolf's t = m +
   //    k(s/sMax - 1)(m - min) collapses to t = m = 253.09: the GLOBAL

@@ -1,10 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Corpus-level deduplication — the training-data-pipeline operations a
-  * 100 TB corpus needs (exact, MinHash+LSH, SimHash, n-gram Jaccard). All
+  * 100 TB corpus needs (exact, MinHash+LSH, latest recrawl per url). All
   * shapes are shuffle-conscious:
   *  - exact dedup is one hash-partitioned groupBy on a 16-byte digest
   *    (shuffles digests + ids only, never full text);
@@ -97,24 +97,6 @@ object Dedup {
     }.reduce(_ union _)
   }
 
-  /** Exact token-set Jaccard for candidate pairs (verification stage after
-    * LSH): join candidates back to token sets, compute |∩| / |∪|.
-    */
-  def jaccardVerify(
-      candidates: DataFrame, df: DataFrame, idCol: String, textCol: String,
-      threshold: Double): DataFrame = {
-    val toks = df.select(col(idCol).as("jid"),
-      array_distinct(split(col(textCol), "\\s+")).as("toks"))
-    val a = toks.select(col("jid").as("id_a"), col("toks").as("toks_a"))
-    val b = toks.select(col("jid").as("id_b"), col("toks").as("toks_b"))
-    candidates.join(a, "id_a").join(b, "id_b")
-      .withColumn("inter", size(array_intersect(col("toks_a"), col("toks_b"))).cast("double"))
-      .withColumn("jaccard",
-        col("inter") / (size(col("toks_a")) + size(col("toks_b")) - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-  }
-
   /** Recrawl dedup by (url, warc_ts) — the batch max-by-timestamp contract
     * (SURVEY §2.9): per url keep the row with the greatest warc_ts; equal
     * timestamps tie-break on md5(html) descending (content-addressed, so
@@ -132,24 +114,5 @@ object Dedup {
     df.withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .drop("rn")
-  }
-
-  /** 60-bit SimHash column over the distinct-token set (near-dup
-    * fingerprint; hamming-close simhashes = near-dup texts). 60 bits, not
-    * 64: each per-token hash is the first 15 hex chars of md5 — the 16th
-    * nibble would push `conv(...).cast(long)` past Long.MaxValue, where the
-    * unsigned-string→long cast nulls out; 60 deterministic bits beat 64
-    * bits with an overflow seam.
-    */
-  def simhash60(textCol: Column): Column = {
-    val toks = array_distinct(split(textCol, "\\s+"))
-    // per-token 64-bit hash from the first 16 hex chars of md5
-    val h = transform(toks, t => conv(substring(md5(t.cast("binary")), 1, 15), 16, 10).cast("long"))
-    val bits = (0 until 60).map { b =>
-      val vote = aggregate(h, lit(0),
-        (acc, v) => acc + (shiftright(v, b).bitwiseAND(lit(1L)) * 2 - 1).cast("int"))
-      when(vote > 0, lit(1L << b)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
   }
 }

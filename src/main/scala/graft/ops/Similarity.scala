@@ -6,10 +6,9 @@ import org.apache.spark.sql.expressions.Window
 
 /** Embedding similarity search over an `array<float>` column.
   *
-  * Baseline: brute-force cosine top-k (cross join, codegen'd zip_with dot
-  * product — exact, O(Q·N)). Scale path: LSH sign-bucketing / IVF-style
-  * coarse quantization so the join key becomes a bucket id and AQE prunes
-  * the candidate space; brute force then runs within buckets only.
+  * LSH sign-bucketing / IVF-style coarse quantization make the join key a
+  * bucket id, so AQE prunes the candidate space and exact dot-product
+  * scoring runs within buckets only (never an O(Q·N) cross join).
   */
 object Similarity {
 
@@ -20,29 +19,6 @@ object Similarity {
 
   def l2norm(v: Column): Column =
     sqrt(aggregate(v.cast("array<double>"), lit(0.0), (acc, x) => acc + x * x))
-
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (l2norm(a) * l2norm(b))
-
-  /** Exact brute-force top-k by dot product (cosine for normalized vecs).
-    * `queries`/`corpus`: (id, vec) frames. Rank ties broken by corpus id —
-    * fully deterministic output.
-    */
-  def bruteForceTopK(
-      queries: DataFrame, corpus: DataFrame, k: Int,
-      qId: String = "qid", qVec: String = "qv",
-      cId: String = "vec_id", cVec: String = "dv"): DataFrame = {
-    graft.functions.GraftFunctions.register(queries.sparkSession)
-    val scored = queries.join(corpus, col(cId) =!= col(qId))
-      .withColumn("score", round(dotN(col(qVec), col(cVec)), 6))
-      // project BEFORE the rank exchange (guide §2.3): the window only needs
-      // (qId, cId, score) — without this the per-pair shuffle carries both
-      // embedding vectors, dim× more bytes than the result needs
-      .select(col(qId), col(cId), col("score"))
-    val w = Window.partitionBy(qId).orderBy(desc("score"), asc(cId))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col(qId), col("rn"), col(cId), col("score"))
-  }
 
   /** Deterministic pseudo-random hyperplane weight for dim i, plane j
     * (no RNG state: pure function of (i, j), same on every executor).

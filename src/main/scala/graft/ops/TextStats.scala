@@ -3,22 +3,11 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Text-analysis operations for corpus curation: quality scoring, token
-  * counting, language identification — all as codegen-friendly column
-  * expressions (no UDFs in the hot path).
+/** Text-analysis operations for corpus curation: quality scoring and
+  * language identification — all as codegen-friendly column expressions
+  * (no UDFs in the hot path).
   */
 object TextStats {
-
-  /** Whitespace token count (canonical model: runs of whitespace split). */
-  def tokenCount(text: Column): Column =
-    size(filter(split(text, "\\s+"), t => t =!= ""))
-
-  /** BPE-ish subword count estimate: word-boundary pieces + digit runs +
-    * punctuation marks each count (the common ~chars/4 heuristic is NOT
-    * used; this is a deterministic regex segmentation).
-    */
-  def subwordCount(text: Column): Column =
-    size(filter(split(text, "(?=[A-Z])|[^A-Za-z0-9]+"), t => t =!= ""))
 
   /** Quality scores per document (detector family §2.7 + curation ratios).
     * ONE string traversal via the native TextQualityCounts expression — the

@@ -6,7 +6,6 @@ import graft.classify.Classifiers
 import graft.clean.Artifacts
 import graft.boundary.Boundary
 import graft.detect.Quality
-import graft.text.Canon
 
 /** The composed per-row extraction — the whole PRLib pipeline as one pure
   * function (SURVEY.md §0 conceptual pipeline):
@@ -29,7 +28,6 @@ object Extract {
       classifier: Classifiers.Config = Classifiers.Default,
       caps: HtmlTokenizer.Caps = HtmlTokenizer.DefaultCaps,
       maxGarbageRatio: Double = 0.10,
-      boundaryCrop: Boolean = true,
       // "contour" (documentContour/Kadane) or "separators" (the
       // findHoughLineContour alternative, which falls back to contour when
       // it reports failure — the reference's two-strategy composition,
@@ -108,15 +106,13 @@ object Extract {
       else cfg.classifier
     var labels = Classifiers.classify(blocks, clsCfg)
     labels = Artifacts.all(blocks, labels)
-    if (cfg.boundaryCrop) {
-      val region = cfg.boundaryKind match {
-        case "separators" =>
-          Boundary.findSeparatorFrame(blocks, labels)
-            .orElse(Boundary.find(blocks, labels))
-        case _ => Boundary.find(blocks, labels)
-      }
-      labels = Boundary(labels, region)
+    val region = cfg.boundaryKind match {
+      case "separators" =>
+        Boundary.findSeparatorFrame(blocks, labels)
+          .orElse(Boundary.find(blocks, labels))
+      case _ => Boundary.find(blocks, labels)
     }
+    labels = Boundary(labels, region)
     // 6. assemble + fixpoint canonicalization
     val (text, spans) = assemble(blocks, labels, cfg.blockSeparator)
     val kept = labels.count(identity)
@@ -168,14 +164,4 @@ object Extract {
     ExtractedDoc(url, "", Array.empty, status,
       DocStats(0, 0, htmlBytes, decodedChars, charset, truncated = false,
         qualityScore = 0.0, garbageRatio = garbage))
-
-  /** Idempotence check helper for tests: extraction output re-fed as a bare
-    * text page must extract to itself (modulo the html wrapper) — in
-    * practice we test `Canon(extracted) == extracted`.
-    */
-  def isCanonicalFixpoint(text: String): Boolean = {
-    // block separator \n is canonical-unstable under Canon (collapses to
-    // space), so the fixpoint contract is per-line
-    text.split('\n').forall(line => Canon(line) == line)
-  }
 }

@@ -1,11 +1,32 @@
-package graft
+package graft.table
 
-/** Minimal JSON parser for the machine-generated golden files (test-only;
-  * grammar restricted to what FixtureCheck emits: objects, arrays, strings
-  * with \" \\ \n \r \t \uXXXX escapes, integers).
+/** Minimal JSON for the machine-written files: snapshot manifests
+  * ([[SnapshotTable]]) and the golden `.jsonl` corpora (FixtureCheck).
+  * The grammar is what those writers emit: objects, arrays, strings,
+  * numbers, true/false/null.
   */
-object JsonLite {
+object Json {
   def parse(s: String): Any = new P(s).value()
+
+  /** `v` as a JSON string literal: quote, backslash, \n \r \t and the other
+    * control chars below U+0020 are escaped, everything else is kept as is
+    * — a quote or control char in a path or url must not break the file.
+    */
+  def quote(v: String): String = {
+    val sb = new java.lang.StringBuilder(v.length + 8)
+    sb.append('"')
+    v.foreach {
+      case '"' => sb.append("\\\"")
+      case '\\' => sb.append("\\\\")
+      case '\n' => sb.append("\\n")
+      case '\r' => sb.append("\\r")
+      case '\t' => sb.append("\\t")
+      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
+      case c => sb.append(c)
+    }
+    sb.append('"')
+    sb.toString
+  }
 
   private final class P(s: String) {
     private var i = 0
@@ -23,15 +44,14 @@ object JsonLite {
       }
     }
     private def obj(): Map[String, Any] = {
-      i += 1 // {
+      i += 1
       val m = scala.collection.mutable.LinkedHashMap.empty[String, Any]
       ws()
       if (s.charAt(i) == '}') { i += 1; return m.toMap }
       while (true) {
         ws()
         val k = str()
-        ws()
-        require(s.charAt(i) == ':'); i += 1
+        ws(); require(s.charAt(i) == ':'); i += 1
         m(k) = value()
         ws()
         if (s.charAt(i) == ',') i += 1
@@ -40,7 +60,7 @@ object JsonLite {
       m.toMap
     }
     private def arr(): Vector[Any] = {
-      i += 1 // [
+      i += 1
       val b = Vector.newBuilder[Any]
       ws()
       if (s.charAt(i) == ']') { i += 1; return b.result() }
@@ -69,9 +89,8 @@ object JsonLite {
             case 'b' => sb.append('\b')
             case 'f' => sb.append('\f')
             case 'u' =>
-              sb.append(Integer.parseInt(s.substring(i + 1, i + 5), 16).toChar)
-              i += 4
-            case other => sb.append(other)
+              sb.append(Integer.parseInt(s.substring(i + 1, i + 5), 16).toChar); i += 4
+            case o => sb.append(o)
           }
         } else sb.append(c)
         i += 1
@@ -83,7 +102,7 @@ object JsonLite {
       val start = i
       while (i < s.length && (s.charAt(i).isDigit || "+-.eE".contains(s.charAt(i)))) i += 1
       val t = s.substring(start, i)
-      if (t.contains('.') || t.contains('e') || t.contains('E')) t.toDouble else t.toLong
+      if (t.exists(c => c == '.' || c == 'e' || c == 'E')) t.toDouble else t.toLong
     }
   }
 }

@@ -83,7 +83,7 @@ object SnapshotTable {
     // would throw NonLocalReturnControl straight into the catch below.
     def tryParse(manifest: Path): Option[Snapshot] =
       try {
-        val m = graft.tools.JsonMini.parse(
+        val m = Json.parse(
           new String(Files.readAllBytes(manifest), StandardCharsets.UTF_8))
           .asInstanceOf[Map[String, Any]]
         Some(Snapshot(
@@ -127,25 +127,6 @@ object SnapshotTable {
     df.withColumn("bucket", pmod(xxhash64(col(urlCol)), lit(buckets)))
       .write.partitionBy("bucket").mode("overwrite").parquet(runPath.toString)
     commitRun(dir, runId)
-  }
-
-  /** Full JSON string escape — a quote or control char in a path or runId
-    * must not brick the manifest.
-    */
-  private def jsonStr(v: String): String = {
-    val sb = new java.lang.StringBuilder(v.length + 8)
-    sb.append('"')
-    v.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.append('"')
-    sb.toString
   }
 
   /** Row count of a parquet file from its FOOTER metadata only (no data
@@ -207,8 +188,8 @@ object SnapshotTable {
       Files.createDirectories(snapDir(dir))
       val name = f"v$id%05d.json"
       val json = {
-        val fs = files.map(f => jsonStr(f)).mkString("[", ",", "]")
-        val rs = runIds.map(r => jsonStr(r)).mkString("[", ",", "]")
+        val fs = files.map(Json.quote).mkString("[", ",", "]")
+        val rs = runIds.map(Json.quote).mkString("[", ",", "]")
         s"""{"snapshot_id":$id,"files":$fs,"rows":$rows,"run_ids":$rs,"committed_at_ms":${System.currentTimeMillis()}}"""
       }
       // ADVICE r2: a crash mid-Files.write(CREATE_NEW) leaves a torn v<max>

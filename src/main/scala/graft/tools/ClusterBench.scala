@@ -1,16 +1,12 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Extraction throughput through a REAL standalone cluster (multi-executor
   * JVMs, cross-process task dispatch and result serialization) — the
-  * cluster-real companion to perfbench's local[N] passes and
-  * MultiJvmBench's executor emulation. All JVMs share this box, so the
-  * numbers measure the engine + real Spark distribution machinery, not
-  * network hardware.
+  * cluster-real companion to perfbench's local[N] passes. All JVMs share
+  * this box, so the numbers measure the engine + real Spark distribution
+  * machinery, not network hardware.
   *
   * Usage: ClusterBench <master> <docs> <passes> <out.jsonl>
   */
@@ -30,11 +26,8 @@ object ClusterBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val cpuNs = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null) cpuNs.addAndGet(t.taskMetrics.executorCpuTime)
-    })
+    val meter = new graft.Bench.CpuMeter
+    spark.sparkContext.addSparkListener(meter)
 
     val input = graft.Bench.ensureInput(spark, n)
     val split = graft.Bench.tuneSplitFor(spark, input)
@@ -47,12 +40,9 @@ object ClusterBench {
 
     val w = new java.io.PrintWriter(new java.io.FileWriter(out, true))
     (1 to passes).foreach { p =>
-      val c0 = cpuNs.get()
+      meter.reset()
       val (sec, docs, bytes) = graft.Bench.extractionRunFiles(spark, Seq(input))
-      // task-end callbacks race the job end; settle
-      var prev = -1L; var cur = cpuNs.get(); var si = 0
-      while (si < 20 && cur != prev) { Thread.sleep(50); prev = cur; cur = cpuNs.get(); si += 1 }
-      val cpu = (cur - c0) / 1e9
+      val cpu = meter.settledCpuSec()
       val line = f"""{"master":"$master","pass":$p,"wall_s":$sec%.2f,"cpu_s":$cpu%.2f,"docs":$docs,"bytes":$bytes,"docs_per_sec":${docs / sec}%.0f}"""
       println(line)
       w.println(line)

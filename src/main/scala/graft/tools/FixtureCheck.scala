@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.fixtures.FixtureGen
 import graft.pipeline.Extract
+import graft.table.Json
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
 
@@ -14,20 +15,6 @@ import java.nio.charset.StandardCharsets
   *         runMain graft.tools.FixtureCheck write 500 src/test/resources/golden
   */
 object FixtureCheck {
-
-  def jsonEscape(s: String): String = {
-    val sb = new java.lang.StringBuilder(s.length + 16)
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.toString
-  }
 
   def main(args: Array[String]): Unit = {
     val mode = if (args.nonEmpty) args(0) else "check"
@@ -101,7 +88,7 @@ object FixtureCheck {
       if (mode == "write") {
         val spansJson = doc.spans.map(s => s"""{"start":${s.start},"end":${s.end}}""").mkString("[", ",", "]")
         lines += ((f.corpus,
-          s"""{"url":"${jsonEscape(f.page.url)}","extracted_text":"${jsonEscape(doc.extracted_text)}","spans":$spansJson,"status":"${doc.status}"}"""))
+          s"""{"url":${Json.quote(f.page.url)},"extracted_text":${Json.quote(doc.extracted_text)},"spans":$spansJson,"status":"${doc.status}"}"""))
       }
     }
     println(s"PASS $pass/${fixtures.length}")

@@ -1,8 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 /** Distributed-pass cost decomposition: runs the SAME corpus through
@@ -37,11 +34,8 @@ object StageFloor {
     val spark = graft.Bench.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
-    val cpuNs = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null) cpuNs.addAndGet(t.taskMetrics.executorCpuTime)
-    })
+    val meter = new graft.Bench.CpuMeter
+    spark.sparkContext.addSparkListener(meter)
     val input = graft.Bench.ensureInput(spark, n)
 
     def pageRows() = spark.read.parquet(input).as[graft.core.PageRow]
@@ -113,13 +107,11 @@ object StageFloor {
       var bestWall = Double.MaxValue
       var bestCpu = Double.MaxValue
       (1 to passes).foreach { _ =>
-        val c0 = cpuNs.get()
+        meter.reset()
         val t0 = System.nanoTime()
         f()
         val wall = (System.nanoTime() - t0) / 1e9
-        var prevC = -1L; var curC = cpuNs.get(); var si = 0
-        while (si < 20 && curC != prevC) { Thread.sleep(50); prevC = curC; curC = cpuNs.get(); si += 1 }
-        val cpu = (curC - c0) / 1e9
+        val cpu = meter.settledCpuSec()
         if (cpu < bestCpu) { bestCpu = cpu; bestWall = wall }
       }
       println(f"$name%-8s $bestWall%8.2f $bestCpu%8.2f  (+${bestCpu - prev}%.2f)")

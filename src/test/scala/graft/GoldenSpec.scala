@@ -24,7 +24,7 @@ class GoldenSpec extends AnyFunSuite {
     val in = getClass.getResourceAsStream(s"/golden/$corpus/golden.jsonl")
     assert(in != null, s"missing golden resource for $corpus")
     val src = Source.fromInputStream(in, "UTF-8")
-    try src.getLines().filter(_.nonEmpty).map(l => JsonLite.parse(l).asInstanceOf[Map[String, Any]]).toVector
+    try src.getLines().filter(_.nonEmpty).map(l => graft.table.Json.parse(l).asInstanceOf[Map[String, Any]]).toVector
     finally src.close()
   }
 

@@ -25,7 +25,7 @@ class ReadmeCountSpec extends AnyFunSuite {
     assert(r.isDefined, "README.md no longer cites a CORRECTNESS_r{N} artifact")
     val f = Paths.get(s"CORRECTNESS_r${r.get.group(1)}.json")
     assert(Files.exists(f), s"README cites $f which does not exist")
-    val parsed = JsonLite.parse(new String(Files.readAllBytes(f), StandardCharsets.UTF_8))
+    val parsed = graft.table.Json.parse(new String(Files.readAllBytes(f), StandardCharsets.UTF_8))
     val n = parsed.asInstanceOf[Map[String, Any]].size
     // the cited artifact may lag the code by the queries ADDED this round,
     // but never the other way (citing an artifact with more queries than

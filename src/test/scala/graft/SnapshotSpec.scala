@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
-import graft.table.SnapshotTable
+import graft.table.{Json, SnapshotTable}
 import java.nio.file.Files
 
 /** Snapshot-commit + resume semantics (north rule: killed job resumes from
@@ -82,5 +82,16 @@ class SnapshotSpec extends AnyFunSuite {
     val buckets = new java.io.File(s"$dir/data/run=r1").listFiles()
       .filter(_.getName.startsWith("bucket=")).map(_.getName)
     assert(buckets.length >= 6, s"expected most of 8 buckets used, got ${buckets.length}")
+  }
+
+  test("Json.quote round-trips through Json.parse for U+0000..U+00FF and a surrogate pair") {
+    val chars = (0 to 0xff).map(_.toChar.toString) :+ "\uD83D\uDE00"
+    chars.foreach { c =>
+      assert(Json.parse(Json.quote(c)) == c, f"U+${c.charAt(0).toInt}%04X")
+    }
+    val all = chars.mkString
+    assert(Json.parse(Json.quote(all)) == all)
+    // escapes other writers use, which quote never emits
+    assert(Json.parse("\"\\/\\b\\f\\u00e9\"") == "/\b\f\u00e9")
   }
 }
